@@ -241,14 +241,16 @@ def q_llm_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = tempfile.mkdtemp(prefix="corpusbuild-")
     idx = LshIndex(spark, os.path.join(base, "t"))
-    # Scoped drill width — the _run_maintenance split: dedup/init and
-    # the manifest tail are partition-count-independent aggs/joins over
-    # ≤5000-doc frames (per-job scheduling dominates; width 4 wins),
-    # while the drop-set verify is the real compute and runs at session
-    # width.  r16 interleaved same-session A/B (median of 5, variants
-    # alternated per run): scoped 5.09 s / full pin 5.54 s / no pin
-    # 7.46 s — the full unpin this round briefly carried was measured
-    # worse and reverted to this scoped form.
+    # Scoped drill width.  What runs where: dedup + index init run at
+    # drill width under the first pin; between the pins only the
+    # dropset_gate sizing action runs, at session width (it also fills
+    # drop_set's band persist); the drop-set verify joins are lazy, so
+    # they execute with the manifest tail at drill width under the
+    # second pin, at result.count().  r16 interleaved same-session A/B
+    # of this exact code (median of 5, variants alternated per run):
+    # scoped 5.09 s / full pin 5.54 s / no pin 7.46 s — the full unpin
+    # this round briefly carried was measured worse and reverted to
+    # this scoped form.
     with pinned_shuffle_width(spark):
         deduped = tracked_persist(quality_exact_dedup(docs))
         idx.init(deduped.select("doc_id", "text"))

@@ -59,8 +59,9 @@ def codegen_stage_count(plan: str) -> int:
 
 def executed_metrics_by_node(df: DataFrame) -> list[tuple[str, dict[str, int]]]:
     """One (nodeName, {metric: value}) entry PER PLAN NODE from the
-    EXECUTED physical plan, in walk order — run an action on `df`
-    first or every value reads 0. Descends through the
+    EXECUTED physical plan, in walk order — run collect() on `df`
+    first or every value reads 0 (a noop write or df.count() leaves
+    them at 0). Descends through the
     AdaptiveSparkPlan wrapper and materialized query stages, so
     post-AQE shuffle metrics (shuffleRecordsWritten, recordsRead,
     numOutputRows) are visible. Node boundaries are structural: every

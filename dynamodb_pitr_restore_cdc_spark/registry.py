@@ -904,6 +904,54 @@ _REVERIFY_R16: frozenset[str] = frozenset(
     }
 )
 
+# Round-16 driver record (CORRECTNESS_r16.json): 50/50 window entries
+# hash-matched (the 28 _REVERIFY_R16 seeds, the 2 age-5 r10 tail
+# entries, and the 20 oldest of the r11 cohort).
+_DRIVER_VERIFIED_R16: frozenset[str] = frozenset(
+    {
+        "q_stream_versioned_sink", "q_cdc_delta_log_fold",
+        "q_cdc_delta_schema_evolution", "q_cdc_optimize_plan",
+        "q_llm_lsh_index_maintenance", "q_llm_ivf_index_maintenance",
+        "q_llm_lsh_index_delta_pairs", "q_llm_lsh_index_compaction",
+        "q_llm_corpus_build", "q_cdc_iceberg_log_fold",
+        "q_cdc_iceberg_mor_fold", "q_cdc_iceberg_schema_evolution",
+        "q_cdc_iceberg_optimize_plan", "q_cdc_dlq_redrive",
+        "q_stream_watermark_late", "q_stream_dedup",
+        "q_stream_complete_mode", "q_stream_interval_join",
+        "q_stream_near_dedup", "q_stream_decontaminate",
+        "q_stream_lsh_index_ingest", "q_stream_ivf_index_ingest",
+        "q_stream_corpus_build", "q_stream_stateful_sessions",
+        "q_stream_stateful_totals", "q_stream_anomaly",
+        "q_stream_anomaly_zscore", "q_stream_alert_routing",
+        "q_stream_static_join", "q_stream_schema_evolution",
+        "q_cdc_scd2_history", "q_join_shuffle_hash_hint",
+        "q_scan_partitioned_source", "q_join_bucketed_colocated",
+        "q_join_bucketed_dim", "q_join_dynamic_partition_pruning",
+        "q_scan_zorder_box", "q_dq_constraint_report",
+        "q_set_intersect_all", "q_set_except_all", "q_ts_ohlc_bars",
+        "q_ts_ewma", "q_ts_cusum_changepoint", "q_ts_autocorr",
+        "q_win_cume_dist", "q_tpch_q1_pricing_summary",
+        "q_tpch_q2_min_cost_supplier", "q_tpch_q4_order_priority",
+        "q_tpch_q7_volume_shipping", "q_tpch_q8_market_share",
+    }
+)
+
+# Queries fronted for driver re-verification in round 17.
+# run_cdc_apply became ONE stream: each epoch's foreachBatch splits off
+# the malformed rows itself (no second dead-letter stream) and reads
+# the previous sink version under its known schema.  Its one registered
+# executor is q_stream_foreachbatch_cdc (no dlq_dir, so its dead
+# letters are still dropped and its output is unchanged), but the
+# executed lifecycle changed (the split moved from the streaming plan
+# into the micro-batch, the state read no longer infers), so the
+# round-12 narrow exception does not apply and it is seeded.  Window
+# budget, planned before building: 0 fresh registrations + 1 seed + the
+# 18 oracled entries left of the r11 cohort (q_agg_approx_distinct and
+# q_agg_hll_merge are rows-only, rule 4) + the 31 oldest of the other
+# 32 r12-cohort entries = 50; q_stream_holt_winters, the r12 tail, stays
+# at age 5 and auto-fronts in r18 by rule 3.
+_REVERIFY_R17: frozenset[str] = frozenset({"q_stream_foreachbatch_cdc"})
+
 
 def all_queries() -> dict[str, QuerySpec]:
     """Import all operator modules (side-effect: registration) and return the registry.
@@ -912,12 +960,13 @@ def all_queries() -> dict[str, QuerySpec]:
     only a ~50-entry window, so ordering IS the coverage policy):
 
     1. ORACLED queries with no driver row in any round (never checked);
-    2. queries re-implemented this round (``_REVERIFY_R16`` — the
+    2. queries re-implemented this round (``_REVERIFY_R17`` — the
        CURRENT round's set; editing an older _REVERIFY_* set does
        nothing, the ordering reads only the newest) — the
        local parity suite is otherwise their only guard;
     3. every other ORACLED query by ASCENDING last-verified round
-       (oldest evidence first, registration order within a round) — a
+       (driver evidence recorded through ``_DRIVER_VERIFIED_R16``;
+       oldest evidence first, registration order within a round) — a
        rotation that drains staleness: no row's driver evidence can age
        more than ceil(registry/window) rounds;
     4. rows-only entries (oracle is None) LAST — a driver slot spent on
@@ -989,6 +1038,7 @@ def all_queries() -> dict[str, QuerySpec]:
         _DRIVER_VERIFIED_R13,
         _DRIVER_VERIFIED_R14,
         _DRIVER_VERIFIED_R15,
+        _DRIVER_VERIFIED_R16,
     )
 
     def last_checked(n: str) -> int:
@@ -1000,14 +1050,14 @@ def all_queries() -> dict[str, QuerySpec]:
         n
         for n in order
         if last_checked(n) == 0
-        and n not in _REVERIFY_R16
+        and n not in _REVERIFY_R17
         and n not in rows_only
     ]
     # a rows-only name accidentally listed in a reverify set must not
     # claim a recheck slot (dict first-insert wins, so without this
     # filter it would keep its recheck position despite rule 4) — the
     # _FRONT_ROWS_ONLY_R11 exception below is deliberate and one-shot.
-    recheck = [n for n in order if n in _REVERIFY_R16 and n not in set(rows_only)]
+    recheck = [n for n in order if n in _REVERIFY_R17 and n not in set(rows_only)]
     front_now = (
         _FRONT_ROWS_ONLY_R11
         if len(rounds) == _FRONT_ROWS_ONLY_WHILE_N_ROUNDS

@@ -3,8 +3,8 @@ Structured Streaming (SURVEY.md §3).
 
 Reference shape: DynamoDB Stream → SQS FIFO buffer → Lambda drain →
 batch_write_item (cdc-to-sqs/main.py:25-34, lambda-backfill/main.py:25-46).
-Spark shape: file/Kafka `readStream` → validation filter-split (DLQ) →
-`writeStream.foreachBatch(cdc_merge)` with checkpointing. The stream's
+Spark shape: file/Kafka `readStream` → `writeStream.foreachBatch(
+validation filter-split (DLQ) + cdc_merge)` with checkpointing. The stream's
 checkpoint replaces the SQS buffer (A4), micro-batching replaces the
 ESM batching policy (A15), and the seq_no guard inside cdc_merge
 replaces FIFO delivery (A6) — order is recovered from data, never
@@ -22,10 +22,13 @@ partition-parallel and sink-agnostic.
 from __future__ import annotations
 
 import os
+import shutil
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ..operators.cdc import cdc_merge
 from .util import atomic_write_text
@@ -53,7 +56,7 @@ def parse_changelog_records(raw: DataFrame) -> DataFrame:
     columns (key/topic/partition/offset/timestamp) pass through the
     cast untouched and are dropped by the projection. A record whose
     body fails to parse comes out as an all-NULL row, which
-    ``split_dlq`` then routes to the dead-letter stream — malformed
+    ``split_dlq`` then routes to the dead-letter output — malformed
     payloads are data, not exceptions (A2/A7).
 
     Kept separate from the source construction so this — the only
@@ -119,9 +122,26 @@ def read_changelog_stream(
 
 
 def split_dlq(stream: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """A2/A7: validation filter-split. Returns (ok, dlq) streams."""
+    """A2/A7: validation filter-split. Returns (ok, dlq) frames, streaming
+    or static alike."""
     bad = F.col("key").isNull() | F.col("op").isNull() | F.col("seq_no").isNull()
     return stream.where(~bad), stream.where(bad)
+
+
+def _publish_dead_letters(staged: str, dlq_dir: str, epoch_id: int) -> None:
+    """Move one epoch's staged dead-letter parts into `dlq_dir` as flat
+    ``epoch-{epoch_id}-<part>`` files. Parts an earlier attempt of the
+    same epoch left there are removed first, so a replayed epoch
+    replaces its rows instead of appending a second copy — even when
+    the crashed attempt wrote more part files than this one."""
+    prefix = f"epoch-{epoch_id}-"
+    for f in os.listdir(dlq_dir):
+        if f.startswith(prefix):
+            os.remove(os.path.join(dlq_dir, f))
+    for f in os.listdir(staged):
+        if not f.startswith(("_", ".")):  # _SUCCESS marker, .crc sidecars
+            os.replace(os.path.join(staged, f), os.path.join(dlq_dir, prefix + f))
+    shutil.rmtree(staged)
 
 
 def run_cdc_apply(
@@ -131,8 +151,10 @@ def run_cdc_apply(
     work_dir: str,
     dlq_dir: str | None = None,
 ) -> str:
-    """Drain all available changelog files through foreachBatch(cdc_merge),
-    starting from `snapshot`. Returns the path of the final sink version.
+    """Drain all available changelog files through ONE availableNow
+    stream whose foreachBatch splits each micro-batch (``split_dlq``)
+    and merges the valid rows (``cdc_merge``), starting from
+    `snapshot`. Returns the path of the final sink version.
 
     Versioned-directory sink: each micro-batch writes `v{epoch}` and
     advances a pointer — read-modify-write against an immutable input,
@@ -141,7 +163,25 @@ def run_cdc_apply(
     to the same state: exactly-once STATE from at-least-once DELIVERY,
     which is precisely what the reference's TODO at
     lambda-backfill/main.py:47 fails to provide.
+
+    Dead letters (A2/A7) leave on the same delivery, like the
+    reference's SQS redrive: with `dlq_dir`, epoch e's malformed rows
+    become flat parquet files ``dlq_dir/epoch-{e}-part-*`` (changelog
+    columns only — no partition column, so ``spark.read.parquet`` and
+    ``pyarrow.parquet.read_table`` both read the directory as one
+    table). Write order per epoch: the dead-letter rows and `v{e}` are
+    two concurrent jobs over the one micro-batch; only when BOTH landed
+    does the pointer move to `v{e}`. A crash before the pointer write
+    replays the epoch, which replaces its own dead-letter files (never
+    appends); a crash after it skips the epoch, whose files already
+    landed. Without `dlq_dir`, malformed rows are dropped.
     """
+    if dlq_dir is not None:
+        if os.path.isdir(os.path.join(dlq_dir, "_spark_metadata")):
+            # a file-sink log makes spark.read.parquet list only the files
+            # it names, which would hide every file written here
+            raise ValueError(f"{dlq_dir} holds a streaming file-sink log; use a fresh dlq_dir")
+        os.makedirs(dlq_dir, exist_ok=True)
     os.makedirs(work_dir, exist_ok=True)
     pointer = os.path.join(work_dir, "_LATEST")
     if os.path.exists(pointer):
@@ -150,14 +190,15 @@ def run_cdc_apply(
         # otherwise replay would merge new batches onto a stale snapshot.
         with open(pointer) as fh:
             snap_path = fh.read().strip()
+        schema = None  # the resumed version's schema: inferred once
     else:
         snap_path = os.path.join(work_dir, "v_init")
         snapshot.write.mode("overwrite").parquet(snap_path)
         atomic_write_text(pointer, snap_path)
-    state = {"path": snap_path}
-
-    stream = read_changelog_stream(spark, src_dir)
-    ok, dlq = split_dlq(stream)
+        schema = snapshot.schema
+    # the schema of state["path"] travels with it: every epoch after the
+    # first reads its predecessor without a schema-inference job
+    state = {"path": snap_path, "schema": schema}
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         new_path = os.path.join(work_dir, f"v{epoch_id}")
@@ -166,35 +207,41 @@ def run_cdc_apply(
             # (crash fell between pointer write and the stream's commit-log
             # write). Re-merging would read and overwrite the same path —
             # illegal in Spark — and the seq_no guard makes it a no-op
-            # anyway, so the replayed epoch is skipped outright.
+            # anyway, so the replayed epoch is skipped outright; its
+            # dead-letter files landed before the pointer did.
             return
-        sess = batch_df.sparkSession
-        snap = sess.read.parquet(state["path"])
-        merged = cdc_merge(snap, batch_df)
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-        # pointer write AFTER the data write: a crash between the two
-        # replays the epoch, which overwrites v{epoch} idempotently from
-        # the still-prior pointer (atomic: a torn pointer would wedge
-        # every resume)
+        reader = batch_df.sparkSession.read
+        if state["schema"] is not None:
+            reader = reader.schema(state["schema"])
+        ok, bad = split_dlq(batch_df)
+        merged = cdc_merge(reader.parquet(state["path"]), ok)
+        if dlq_dir is None:
+            merged.write.mode("overwrite").parquet(new_path)
+        else:
+            staged = os.path.join(dlq_dir, f"_epoch-{epoch_id}.staging")
+            # inherit the stream's job group, so stopping the query
+            # cancels this job too
+            write_bad = inheritable_thread_target(batch_df.sparkSession)(
+                lambda: bad.write.mode("overwrite").parquet(staged)
+            )
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                bad_done = pool.submit(write_bad)
+                merged.write.mode("overwrite").parquet(new_path)
+                bad_done.result()
+            _publish_dead_letters(staged, dlq_dir, epoch_id)
+        state["path"], state["schema"] = new_path, merged.schema
+        # pointer write AFTER the data and dead-letter writes: a crash
+        # between them replays the epoch, which overwrites v{epoch} and
+        # its dead letters idempotently from the still-prior pointer
+        # (atomic: a torn pointer would wedge every resume)
         atomic_write_text(pointer, new_path)
 
     q = (
-        ok.writeStream.foreachBatch(apply_batch)
+        read_changelog_stream(spark, src_dir)
+        .writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", os.path.join(work_dir, "_checkpoint"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-
-    if dlq_dir is not None:
-        dq = (
-            dlq.writeStream.format("parquet")
-            .option("path", dlq_dir)
-            .option("checkpointLocation", os.path.join(work_dir, "_dlq_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        dq.awaitTermination()
-
     return state["path"]

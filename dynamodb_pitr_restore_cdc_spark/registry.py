@@ -944,13 +944,44 @@ _DRIVER_VERIFIED_R16: frozenset[str] = frozenset(
 # letters are still dropped and its output is unchanged), but the
 # executed lifecycle changed (the split moved from the streaming plan
 # into the micro-batch, the state read no longer infers), so the
-# round-12 narrow exception does not apply and it is seeded.  Window
-# budget, planned before building: 0 fresh registrations + 1 seed + the
-# 18 oracled entries left of the r11 cohort (q_agg_approx_distinct and
-# q_agg_hll_merge are rows-only, rule 4) + the 31 oldest of the other
-# 32 r12-cohort entries = 50; q_stream_holt_winters, the r12 tail, stays
-# at age 5 and auto-fronts in r18 by rule 3.
-_REVERIFY_R17: frozenset[str] = frozenset({"q_stream_foreachbatch_cdc"})
+# round-12 narrow exception does not apply and it is seeded.
+# The Delta- and Iceberg-shaped sinks then moved onto one shared
+# log-table core (table_files.LogTableSink): every query that
+# constructs either sink runs re-implemented commit, fold and GC code —
+# the 7 table-format drills, the 4 LshIndex/IvfIndex maintenance
+# queries, q_llm_corpus_build and q_llm_pack_manifest_incremental (an
+# LshIndex each), and the 6 streaming sink drills — and
+# q_cdc_dlq_redrive's builder now consumes RedriveStore.kept_snapshot.
+# Window budget, planned before building: 0 fresh registrations + 21
+# seeds + the 18 oracled entries left of the r11 cohort
+# (q_agg_approx_distinct and q_agg_hll_merge are rows-only, rule 4) +
+# the 11 oldest of the other 32 r12-cohort entries = 50.  The 21
+# r12-cohort entries displaced — q_llm_dedup_clusters, q_llm_ann_lsh,
+# q_llm_ann_recall, q_stream_semantic_neardup, q_llm_semantic_dedup,
+# q_llm_length_percentiles, q_llm_vocab_growth,
+# q_llm_repetition_filter, q_llm_bigram_logprob,
+# q_cdc_incremental_agg, q_cdc_point_lookup, q_cdc_restore_drill,
+# q_cdc_branch_merge, q_llm_tfidf_search, q_llm_paragraph_dedup,
+# q_stream_paragraph_dedup, q_stream_sliding, q_stream_sessionize,
+# q_stream_ewma, q_stream_cusum, q_stream_holt_winters — stay at age 5
+# and, holding the oldest evidence once round 17 is recorded, front in
+# r18 by rule 3.
+_REVERIFY_R17: frozenset[str] = frozenset(
+    {
+        "q_stream_foreachbatch_cdc",
+        "q_cdc_delta_log_fold", "q_cdc_delta_schema_evolution",
+        "q_cdc_optimize_plan", "q_cdc_iceberg_log_fold",
+        "q_cdc_iceberg_mor_fold", "q_cdc_iceberg_schema_evolution",
+        "q_cdc_iceberg_optimize_plan",
+        "q_llm_lsh_index_maintenance", "q_llm_ivf_index_maintenance",
+        "q_llm_lsh_index_delta_pairs", "q_llm_lsh_index_compaction",
+        "q_llm_corpus_build", "q_llm_pack_manifest_incremental",
+        "q_stream_schema_evolution", "q_stream_mor_ingest",
+        "q_stream_mor_ingest_iceberg", "q_stream_lsh_index_ingest",
+        "q_stream_ivf_index_ingest", "q_stream_corpus_build",
+        "q_cdc_dlq_redrive",
+    }
+)
 
 
 def all_queries() -> dict[str, QuerySpec]:

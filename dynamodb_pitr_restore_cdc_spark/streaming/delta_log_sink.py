@@ -56,6 +56,12 @@ SinkFormat / CompactingSinkFormat / VersionedSinkFormat protocols —
 the behavior suite runs unmodified against this class, which is the
 executable form of the seam promise.
 
+Everything above the log encoding — the pin-before-read commit loop,
+the merge-on-read fold, MERGE/OPTIMIZE/append/changefeed and the
+retention GC — is `table_files.LogTableSink`, shared with the Iceberg
+sink; this module holds only the log: replay, put-if-absent commits,
+action shapes, checkpoints and the log-truncation half of retention.
+
 Reference parity: the commit log IS the PITR identity the reference
 implements with PITR export + stream replay (`state-machine.json`
 restore path); `snapshot(v)` is its point-in-time restore,
@@ -66,25 +72,22 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cdc import cdc_merge_tombstone, visible
 from .table_files import (
-    align_to_payloads,
-    bucket_counters,
-    empty_frame,
-    evolve_schema_json,
-    optimize_decisions,
-    payload_cols_of,
-    read_with_schema,
-    write_bucketed_files,
+    LOG_FOLD_ORACLE,
+    ORPHAN_GRACE_DEFAULT_S,
+    DataFileInfo,
+    LiveFile,
+    LogTableSink,
+    TableState,
+    _log_fold_drill,
 )
-from .versioned_sink import diff_states
+
 
 def _now_ms() -> int:
     """Wall-clock ms for remove-action deletionTimestamp stamps
@@ -95,46 +98,53 @@ def _now_ms() -> int:
 
 
 LOG_DIR = "_delta_log"
-N_BUCKETS_DEFAULT = 32
-# Orphan sweep ignores files younger than this (VACUUM's retention
-# grace): an in-flight commit attempt writes its data files BEFORE the
-# log-link CAS, so without an age floor a concurrent vacuum would
-# delete them and the attempt, on winning, would publish add actions
-# referencing deleted files (round-9 review — the Iceberg sink's
-# round-8 fix, mirrored)
-ORPHAN_GRACE_DEFAULT_S = 300.0
 
 
-class DeltaLogSink:
+class _Replay:
+    """Table state accumulated by replaying a checkpoint and commit
+    files in order: adds minus removes, the newest metaData wins."""
+
+    def __init__(self) -> None:
+        self.schema: str | None = None
+        self.config: dict = {}
+        self.active: dict[str, dict] = {}
+
+    def read(self, path: str) -> list[dict]:
+        """Apply one checkpoint or commit file; returns its actions."""
+        with open(path) as fh:
+            actions = [json.loads(line) for line in fh]
+        for a in actions:
+            if "metaData" in a:
+                self.schema = a["metaData"]["schemaString"]
+                self.config = a["metaData"].get("configuration", {})
+            elif "add" in a:
+                self.active[a["add"]["path"]] = a["add"]
+            elif "remove" in a:
+                self.active.pop(a["remove"]["path"], None)
+        return actions
+
+
+class DeltaLogSink(LogTableSink):
     """VersionedSinkFormat + CompactingSinkFormat over a Delta-shaped
-    transaction log. See module docstring for the protocol."""
+    transaction log. See module docstring for the protocol; the
+    protocol methods are LogTableSink's."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        n_buckets: int = N_BUCKETS_DEFAULT,
-        transform: str = "bucket",
-    ):
-        """`transform` picks the partition transform, Iceberg-spec
-        style: "bucket" (hash-mod, default) or "mod" (identity-mod —
-        reproducible by external engines; the optimize-plan oracle uses
-        key % N). Only init CONSUMES these arguments: an existing
-        table's transform (and width) is read back from its persisted
-        metaData configuration, so a fresh handle can never mis-bucket
-        a table created with different parameters (round-9 review — the
-        mergeKey persistence rule applied to the layout)."""
-        self.spark = spark
-        self.path = path
-        self.n_buckets = n_buckets
-        self._transform_arg = transform
-        self._transform_cached: tuple[str, int] | None = None
-        os.makedirs(os.path.join(path, LOG_DIR), exist_ok=True)
+    _LOG_DIR = LOG_DIR
+    _DATA_DIR = "files"
+    _DATA_PREFIX = "c"
+    # a racing expire_versions checkpoints the horizon, then deletes
+    # commits a pinned replay still needs: ValueError (version expired)
+    # or FileNotFoundError (the same race, TOCTOU form)
+    _VANISHED = (ValueError, FileNotFoundError)
+    _APPEND_RESOLVE = "mergeKey resolution"
+    _EMPTY_APPEND_COMMITS = True
+    _OPERATIONS = {"merge": "MERGE", "rewrite": "OPTIMIZE", "append": "WRITE"}
+
+    @staticmethod
+    def _no_table(e: Exception) -> bool:
+        return isinstance(e, ValueError) and "no commits" in str(e)
 
     # -- log plumbing ----------------------------------------------------
-
-    def _log_dir(self) -> str:
-        return os.path.join(self.path, LOG_DIR)
 
     def _log_path(self, v: int) -> str:
         return os.path.join(self._log_dir(), f"{v:020d}.json")
@@ -157,20 +167,11 @@ class DeltaLogSink:
         return vs[-1]
 
     def _commit(self, v: int, actions: list[dict]) -> None:
-        """Put-if-absent publication of one commit: write a temp file,
-        hard-link it into the version slot (EEXIST = another writer won
-        — Delta's optimistic concurrency), drop the temp name."""
-        tmp = os.path.join(self._log_dir(), f".tmp-{uuid.uuid4().hex[:12]}")
-        with open(tmp, "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a) + "\n")
-            fh.flush()
-            os.fsync(fh.fileno())  # the link IS publication: a commit
-            # whose data blocks never hit disk would corrupt the log
-        try:
-            os.link(tmp, self._log_path(v))
-        finally:
-            os.remove(tmp)
+        """Publish one commit file put-if-absent (EEXIST = another
+        writer won — Delta's optimistic concurrency)."""
+        self._link_publish(
+            self._log_path(v), "".join(json.dumps(a) + "\n" for a in actions)
+        )
 
     def _newest_checkpoint_at_most(self, v: int) -> int | None:
         """Honor _last_checkpoint first (Delta's fast path), fall back
@@ -205,18 +206,11 @@ class DeltaLogSink:
         v = latest if version is None else version
         if v > latest or v < 1:
             raise ValueError(f"version {v} out of range (latest {latest})")
-        schema, config, active = None, {}, {}
+        r = _Replay()
         start = 1
         ck = self._newest_checkpoint_at_most(v)
         if ck is not None:
-            with open(self._ckpt_path(ck)) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        schema = a["metaData"]["schemaString"]
-                        config = a["metaData"].get("configuration", {})
-                    elif "add" in a:
-                        active[a["add"]["path"]] = a["add"]
+            r.read(self._ckpt_path(ck))
             start = ck + 1
         for i in range(start, v + 1):
             p = self._log_path(i)
@@ -225,131 +219,74 @@ class DeltaLogSink:
                     f"version {i} expired (vacuumed below the retention "
                     f"horizon); no checkpoint covers it"
                 )
-            with open(p) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        schema = a["metaData"]["schemaString"]
-                        config = a["metaData"].get("configuration", {})
-                    elif "add" in a:
-                        active[a["add"]["path"]] = a["add"]
-                    elif "remove" in a:
-                        active.pop(a["remove"]["path"], None)
-        return schema, config, active
+            r.read(p)
+        return r.schema, r.config, r.active
 
-    # -- data plumbing ---------------------------------------------------
-
-    def _transform(self) -> tuple[str, int]:
-        """(name, N) of the table's partition transform — persisted
-        value first (a fresh handle must follow the TABLE's layout, not
-        its constructor defaults), constructor fallback only before the
-        table exists (init) or for pre-transform tables."""
-        if self._transform_cached is not None:
-            return self._transform_cached
-        fallback = (self._transform_arg, self.n_buckets)
-        last: Exception | None = None
-        for _ in range(5):
-            try:
-                _schema, config, _active = self._state()
-                break
-            except ValueError as e:
-                if "no commits" in str(e):
-                    return fallback  # no table yet: init is writing it —
-                    # don't cache, so post-init reads re-resolve
-                last = e
-                continue  # expiry truncated the log mid-replay: falling
-                # back HERE would silently mis-bucket (the very defect
-                # this method exists to close) — retry instead
-            except FileNotFoundError as e:
-                last = e
-                continue  # same race, TOCTOU form
-        else:
-            # chained: a PERSISTENT failure (e.g. a lost checkpoint)
-            # retries instantly 5 times and lands here too — the cause
-            # must not read as a concurrency race (round-9 review)
-            raise RuntimeError(
-                f"transform resolution failed 5 times at {self.path}"
-            ) from last
-        m = re.fullmatch(
-            r"(bucket|mod)\[(\d+)\]", config.get("bucketTransform", "")
-        )
-        self._transform_cached = (m.group(1), int(m.group(2))) if m else fallback
-        return self._transform_cached
-
-    def _bucket(self, key_col):
-        name, n = self._transform()
-        hashed = key_col if name == "mod" else F.hash(key_col)
-        return F.pmod(hashed, F.lit(n)).alias("bucket")
+    # -- the log encoding of the shared core -------------------------------
 
     @staticmethod
     def _is_mor(add: dict) -> bool:
         return add.get("tags", {}).get("mor") == "true"
 
-    def _fold_adds(
-        self, adds: list[dict], schema_json: str, key: str = "key"
-    ) -> DataFrame:
-        """Tombstoned state of a set of adds, folding merge-on-read
-        delta files over the base files at read time. With no mor files
-        this is a plain read (zero overhead for copy-on-write tables).
-        `key` comes from the caller or the table's persisted mergeKey
-        configuration — never assume the default on a read path.
-        Payload columns come from the SCHEMA, not a constant: files
-        written before an add-column evolution null-fill (schema-on-
-        read), so the fold is evolution-transparent."""
-        base = [a for a in adds if not self._is_mor(a)]
-        mor = [a for a in adds if self._is_mor(a)]
-        cur = self._read_adds(base, schema_json)
-        if not mor:
-            return cur
-        entries = self._read_adds(mor, schema_json).withColumnRenamed(
-            "last_seq", "seq_no"
-        )
-        # the per-key max-seq reduction is associative/commutative, so
-        # folding ALL pending entries in one merge ≡ applying their
-        # commits one by one (tests/test_cdc_property.py)
-        return cdc_merge_tombstone(
-            cur, entries, key=key, payload_cols=payload_cols_of(schema_json, key)
+    @classmethod
+    def _live(cls, add: dict) -> LiveFile:
+        st = json.loads(add["stats"]) if add.get("stats") else {}
+        return LiveFile(
+            path=add["path"],
+            bucket=int(add["partitionValues"]["bucket"]),
+            pending=cls._is_mor(add),
+            records=st.get("numRecords", 0),
+            lower=st.get("minValues", {}),
+            upper=st.get("maxValues", {}),
+            removes=st.get("numRemoves", 0),
         )
 
-    def _write_data(self, bucketed: DataFrame, v: int) -> list[dict]:
-        """Write one commit ATTEMPT's data files (table_files shared
-        physics: immutable attempt-scoped dir, so os.link on the log
-        file stays the one true arbiter and orphaned attempt dirs are
-        debris that vacuum's sweep_orphans reclaims) and shape the
-        per-file facts into Delta add actions with a stats blob."""
-        rel_dir = os.path.join("files", f"c{v:06d}-{uuid.uuid4().hex[:8]}")
-        return [
-            {
-                "path": i.rel_path,
-                "partitionValues": {"bucket": str(i.bucket)},
-                "size": i.size_bytes,
-                "dataChange": True,
-                "stats": json.dumps(
-                    {
-                        "numRecords": i.num_rows,
-                        "minValues": i.mins,
-                        "maxValues": i.maxs,
-                    }
-                ),
-            }
-            for i in write_bucketed_files(bucketed, self.path, rel_dir)
-        ]
+    def _persisted_transform(self) -> str:
+        return self._state()[1].get("bucketTransform", "")
 
-    def _read_adds(self, adds: list[dict], schema_json: str) -> DataFrame:
-        if not adds:
-            return empty_frame(self.spark, schema_json)
-        paths = [os.path.join(self.path, p) for p in sorted(a["path"] for a in adds)]
-        return read_with_schema(self.spark, schema_json, paths)
+    def _pin(self) -> int:
+        return self.latest_version() + 1
 
-    # -- SinkFormat ------------------------------------------------------
+    def _versions(self, *versions: int | None) -> list[TableState]:
+        out = []
+        for v in versions:
+            schema, config, active = self._state(v)
+            out.append(
+                TableState(
+                    schema, config.get("mergeKey", "key"),
+                    [self._live(a) for a in active.values()], base=config,
+                )
+            )
+        return out
 
-    def init(self, snapshot: DataFrame, key: str = "key") -> None:
-        snap = snapshot
-        if "op" not in snap.columns:
-            snap = snap.withColumn("op", F.lit("INSERT"))
-        schema_json = snap.schema.json()
-        bucketed = snap.withColumn("bucket", self._bucket(F.col(key)))
-        adds = self._write_data(bucketed, 1)
+    def _pinned(self, slot: int | None, buckets: set[int] | None = None) -> TableState:
+        # the replay reads the LATEST state: a commit landing after the
+        # pin claims the pinned version and fails the commit with EEXIST
+        (state,) = self._versions(None)
+        state.slot = state.seq = self.latest_version() + 1 if slot is None else slot
+        if buckets is not None:
+            state.files = [f for f in state.files if f.bucket in buckets]
+        return state
+
+    def _file_record(self, i: DataFileInfo) -> dict:
+        """One data file as a Delta add action with a stats blob."""
+        return {
+            "path": i.rel_path,
+            "partitionValues": {"bucket": str(i.bucket)},
+            "size": i.size_bytes,
+            "dataChange": True,
+            "stats": json.dumps(
+                {
+                    "numRecords": i.num_rows,
+                    "minValues": i.mins,
+                    "maxValues": i.maxs,
+                }
+            ),
+        }
+
+    def _create(
+        self, schema_json: str, key: str, transform: str, adds: list[dict]
+    ) -> None:
         self._commit(
             1,
             [
@@ -366,9 +303,7 @@ class DeltaLogSink:
                         # even from a fresh sink instance
                         "configuration": {
                             "mergeKey": key,
-                            "bucketTransform": (
-                                f"{self._transform_arg}[{self.n_buckets}]"
-                            ),
+                            "bucketTransform": transform,
                         },
                     }
                 },
@@ -376,444 +311,65 @@ class DeltaLogSink:
             ],
         )
 
-    def apply_batch(
-        self, batch: DataFrame, key: str = "key", max_attempts: int = 5
+    def _publish(
+        self,
+        state: TableState,
+        op: str,
+        removed: list[LiveFile],
+        added: list[dict],
+        schema_json: str | None,
     ) -> None:
-        """MERGE INTO: resolve the batch against ONLY the files of the
-        buckets it touches (partitionValues skipping), write replacement
-        files, publish remove+add in one commit. Immutable data files
-        mean the read side is never the write target — no lineage break
-        needed.
-
-        Optimistic concurrency, Delta's documented loser behavior: if
-        another writer claims our target version first (EEXIST on the
-        log link), re-read the NEW table state and recompute the whole
-        merge before retrying — the winner may have replaced the very
-        files our candidate set named, so committing the stale remove
-        set would resurrect its rows as duplicates. The losing
-        attempt's data files are attempt-scoped orphans reclaimed by
-        ``expire_versions(sweep_orphans=True)``."""
-        batch = batch.withColumn("bucket", self._bucket(F.col(key)))
-        touched = {
-            r.bucket for r in batch.select("bucket").distinct().collect()
-        }  # ≤ N ints: orchestration, not data
-        for _ in range(max_attempts):
-            v = self.latest_version() + 1
-            try:
-                schema_json, config, active = self._state()
-            except (ValueError, FileNotFoundError):
-                continue  # expiry truncated the log under our replay:
-                # re-pin and retry (the Iceberg sink's FileNotFoundError
-                # twin — a racing expire_versions checkpoints the horizon
-                # then deletes commits our pinned replay still needed)
-            # add-column schema evolution (union-by-name): a batch
-            # carrying payload columns the table doesn't know widens
-            # the schema in the SAME commit (a new metaData action).
-            # Evolved inside the retry loop so a racing writer's own
-            # evolution is unioned on recompute, never overwritten.
-            schema_json, evolved = evolve_schema_json(
-                schema_json, batch.schema, key
-            )
-            cand = [
-                a
-                for a in active.values()
-                if int(a["partitionValues"]["bucket"]) in touched
-            ]
-            # _fold_adds (not a raw read): a touched bucket may carry
-            # pending merge-on-read delta files, which this commit
-            # retires by folding them into the rewritten base files
-            current = self._fold_adds(cand, schema_json, key=key)
-            merged = cdc_merge_tombstone(
-                current,
-                align_to_payloads(batch.drop("bucket"), schema_json, key),
-                key=key,
-                payload_cols=payload_cols_of(schema_json, key),
-            )
-            adds = self._write_data(
-                merged.withColumn("bucket", self._bucket(F.col(key))), v
-            )
-            meta_actions = (
-                [
-                    {
-                        "metaData": {
-                            "schemaString": schema_json,
-                            "partitionColumns": ["bucket"],
-                            "configuration": config,
-                        }
+        """One commit: commitInfo, a metaData action when the schema
+        evolved (the pinned configuration carried forward), removes
+        (dataChange only for a MERGE: a rewrite changes no data) and
+        adds."""
+        meta_actions = (
+            [
+                {
+                    "metaData": {
+                        "schemaString": schema_json,
+                        "partitionColumns": ["bucket"],
+                        "configuration": state.base,
                     }
-                ]
-                if evolved
-                else []
-            )
-            try:
-                self._commit(
-                    v,
-                    [
-                        {"commitInfo": {"operation": "MERGE"}},
-                        *meta_actions,
-                        *(
-                            {"remove": {"path": a["path"], "dataChange": True,
-                                         "deletionTimestamp": _now_ms()}}
-                            for a in cand
-                        ),
-                        *({"add": a} for a in adds),
-                    ],
-                )
-                return
-            except FileExistsError:
-                continue  # lost the race: recompute against the new state
-        raise RuntimeError(
-            f"MERGE lost the commit race {max_attempts} times at {self.path}"
+                }
+            ]
+            if schema_json is not None
+            else []
+        )
+        self._commit(
+            state.slot,
+            [
+                {"commitInfo": {"operation": self._OPERATIONS[op]}},
+                *meta_actions,
+                *(
+                    {"remove": {"path": f.path, "dataChange": op == "merge",
+                                 "deletionTimestamp": _now_ms()}}
+                    for f in removed
+                ),
+                *({"add": a} for a in added),
+            ],
         )
 
-    def snapshot(self, version: int | None = None) -> DataFrame:
-        """Tombstoned state at a commit — time travel is replaying an
-        older prefix of the log (VERSION AS OF). Pending merge-on-read
-        delta files are folded here too: snapshot() is the STATE
-        contract (one row per key, tombstones as rows), whatever the
-        physical layout — visible(snapshot(v)) must never show
-        duplicate or resurrected keys (round-7 review finding)."""
-        schema_json, config, active = self._state(version)
-        return self._fold_adds(
-            list(active.values()), schema_json, key=config.get("mergeKey", "key")
-        )
-
-    def visible(self) -> DataFrame:
-        return visible(self.snapshot())
-
-    # -- CompactingSinkFormat -------------------------------------------
-
-    def compact(self, reorder_horizon_seq: int, max_attempts: int = 5) -> None:
-        """OPTIMIZE analog: rewrite files that may hold settled
-        tombstones (op='REMOVE' below the reorder horizon), dropping
-        them. Candidates come from add-action STATS only — a file whose
-        op range excludes 'REMOVE' or whose min last_seq is above the
-        horizon is provably clean and is never opened.
-
-        Same loser-retry as apply_batch: a concurrent MERGE that wins
-        our version may have replaced candidate files, so the retry
-        recomputes the candidate set (and the exact emptiness check)
-        from the new state instead of publishing stale removes. The
-        version is pinned BEFORE the state read: a commit landing
-        anywhere after the pin (including during the emptiness-check
-        job) claims our slot and forces EEXIST — pinning after the
-        read would let such a commit slip past the retry and publish
-        a stale remove set (duplicate/resurrected rows)."""
-        for _ in range(max_attempts):
-            v = self.latest_version() + 1
-            try:
-                schema_json, config, active = self._state()
-            except (ValueError, FileNotFoundError):
-                continue  # expiry truncated the log under us: re-pin
-            key = config.get("mergeKey", "key")
-            mor_buckets = {
-                int(a["partitionValues"]["bucket"])
-                for a in active.values()
-                if self._is_mor(a)
-            }
-
-            def may_hold_settled(a: dict) -> bool:
-                if self._is_mor(a):
-                    # a REMOVE row in a delta file is a changelog ENTRY,
-                    # not a folded tombstone: dropping it would resurrect
-                    # the key's older base row. MOR files are reclaimed by
-                    # compact_mor (fold into base), after which the folded
-                    # tombstone becomes reachable by this path.
-                    return False
-                if int(a["partitionValues"]["bucket"]) in mor_buckets:
-                    # the whole BUCKET is ineligible while delta files are
-                    # pending: a pending entry may sit BELOW a settled base
-                    # tombstone's seq (stale entries are supported —
-                    # test_visible_folds_mor_entries), and dropping that
-                    # tombstone would hand the read-time fold to the stale
-                    # entry — a silently resurrected key across a
-                    # dataChange:False commit (round-8 review). compact_mor
-                    # folds the deltas first; the bucket then re-qualifies.
-                    return False
-                s = json.loads(a["stats"]) if a.get("stats") else None
-                if not s or "op" not in s.get("minValues", {}):
-                    return True  # no stats: conservative
-                if not (s["minValues"]["op"] <= "REMOVE" <= s["maxValues"]["op"]):
-                    return False
-                ls_min = s["minValues"].get("last_seq")
-                return ls_min is None or ls_min < reorder_horizon_seq
-            cand = [a for a in active.values() if may_hold_settled(a)]
-            if not cand:
-                return
-            cur = self._read_adds(cand, schema_json)
-            settled = (F.col("op") == "REMOVE") & (
-                F.col("last_seq") < reorder_horizon_seq
-            )
-            # stats admit false positives (a post-merge file mixing old
-            # live rows with a FRESH tombstone passes may_hold_settled
-            # forever) — without this exact check, periodic OPTIMIZE
-            # would rewrite such buckets and grow the log unboundedly
-            if cur.where(settled).limit(1).count() == 0:
-                return
-            kept = cur.where(~settled)
-            adds = self._write_data(
-                kept.withColumn("bucket", self._bucket(F.col(key))), v
-            )
-            try:
-                self._commit(
-                    v,
-                    [
-                        {"commitInfo": {"operation": "OPTIMIZE"}},
-                        *(
-                            {"remove": {"path": a["path"], "dataChange": False,
-                                         "deletionTimestamp": _now_ms()}}
-                            for a in cand
-                        ),
-                        *({"add": a} for a in adds),
-                    ],
-                )
-                return
-            except FileExistsError:
-                continue  # lost the race: recompute candidates
-        raise RuntimeError(
-            f"OPTIMIZE lost the commit race {max_attempts} times at {self.path}"
-        )
-
-    # -- merge-on-read ingest lane ----------------------------------------
-
-    def append(
-        self, batch: DataFrame, key: str | None = None, max_attempts: int = 5
-    ) -> None:
-        """Blind-append ingest: the batch's changelog entries (key,
-        seq_no, op, payload_value) land as immutable delta files tagged
-        ``mor``, in one commit with NO reads and NO removes — Delta's
-        always-compatible append, O(batch) regardless of table size.
-        Each add's stats carry ``numRemoves`` (one file per bucket per
-        commit — repartition("bucket") — so the batch's per-bucket
-        remove counts ARE per-file counts), which optimize_plan reads.
-        Append commits never conflict semantically, so a lost race
-        retries at the next version without recomputing anything.
-        ``key`` defaults to the table's persisted mergeKey — the
-        hardcoded-default defect class the round-8 review flagged."""
-        last: Exception | None = None
-        for _ in range(max_attempts):
-            try:
-                schema_json, config, _active = self._state()
-                key = key or config.get("mergeKey", "key")
-                break
-            except ValueError as e:
-                if "no commits" in str(e):
-                    # appending to a never-inited table is a USER
-                    # error, not a concurrency race — burning the
-                    # retries would misreport it as "mergeKey
-                    # resolution failed" (same special case as
-                    # _transform)
-                    raise
-                last = e
-                continue  # expiry truncated the log under us: retry
-            except FileNotFoundError as e:
-                last = e
-                continue  # same race, TOCTOU form
-        else:
-            raise RuntimeError(
-                f"mergeKey resolution failed {max_attempts} times "
-                f"at {self.path}"
-            ) from last
-        # add-column schema evolution, same union-by-name rule as
-        # apply_batch: the blind-append commit carries a new metaData
-        # action. Schemas only ever WIDEN, so a batch whose columns fit
-        # the pinned schema fits every later schema too — the fast path
-        # never needs to re-check on a lost race.
-        schema_json, evolved = evolve_schema_json(schema_json, batch.schema, key)
-        rows = batch.select(
-            F.col(key),
-            F.col("seq_no").alias("last_seq"),
-            *[F.col(c) for c in payload_cols_of(batch.schema.json(), key)],
-            F.col("op"),
-        ).withColumn("bucket", self._bucket(F.col(key)))
+    def _write_pending(self, rows: DataFrame, key: str, seq: int) -> list[dict]:
+        """The append lane's delta files, tagged ``mor``. Each add's
+        stats carry ``numRemoves`` (one file per bucket per commit —
+        repartition("bucket") — so the batch's per-bucket remove counts
+        ARE per-file counts), which optimize_plan reads."""
         counts = {
             r.bucket: int(r.removes)
             for r in rows.groupBy("bucket")
             .agg(F.sum((F.col("op") == "REMOVE").cast("long")).alias("removes"))
             .collect()
         }  # ≤ N ints: orchestration, not data
-        v = self.latest_version() + 1
-        adds = self._write_data(rows, v)
+        adds = self._write_data(rows, seq)
         for a in adds:
             a["tags"] = {"mor": "true"}
             st = json.loads(a["stats"])
             st["numRemoves"] = counts.get(int(a["partitionValues"]["bucket"]), 0)
             a["stats"] = json.dumps(st)
-        for _ in range(max_attempts):
-            meta_actions: list[dict] = []
-            if evolved:
-                # re-union against the CURRENT schema each attempt: a
-                # racing writer may have evolved too, and publishing our
-                # stale union would silently drop its added columns
-                try:
-                    cur_schema, cur_config, _ = self._state()
-                except (ValueError, FileNotFoundError):
-                    v = self.latest_version() + 1
-                    continue
-                merged_schema, still_new = evolve_schema_json(
-                    cur_schema, batch.schema, key
-                )
-                if still_new:
-                    meta_actions.append(
-                        {
-                            "metaData": {
-                                "schemaString": merged_schema,
-                                "partitionColumns": ["bucket"],
-                                "configuration": cur_config,
-                            }
-                        }
-                    )
-            try:
-                self._commit(
-                    v,
-                    [
-                        {"commitInfo": {"operation": "WRITE"}},
-                        *meta_actions,
-                        *({"add": a} for a in adds),
-                    ],
-                )
-                return
-            except FileExistsError:
-                v = self.latest_version() + 1  # appends never conflict
-        raise RuntimeError(
-            f"WRITE lost the commit race {max_attempts} times at {self.path}"
-        )
-
-    def optimize_plan(
-        self,
-        small_file_rows: int,
-        min_small_files: int,
-        tombstone_pct: int,
-    ) -> DataFrame:
-        """Maintenance policy: per bucket, decide COMPACT or SKIP from
-        add-action STATS alone (the same metadata the skipping uses —
-        zero data reads, O(files) driver work exactly like MERGE/
-        OPTIMIZE candidate selection). COMPACT when the read-side merge
-        fan-in has grown (≥ min_small_files delta files under
-        small_file_rows rows) or the tombstone debt has (delta REMOVE
-        entries exceed tombstone_pct% of the bucket's rows). Inputs and
-        outputs are integers, so the decision is oracle-expressible.
-
-        This is the data-driven form of the reference's operational
-        constants (batch size 25 `lambda-backfill/main.py:22`,
-        maxReceiveCount 5 `cdk-stack.ts:52-63`): thresholds turned into
-        per-bucket decisions off observed stats."""
-        last: Exception | None = None
-        for _ in range(5):
-            try:
-                _schema, _config, active = self._state()
-                break
-            except (ValueError, FileNotFoundError) as e:
-                last = e
-                continue  # expiry truncated the log under us: re-pin
-        else:
-            raise RuntimeError(
-                f"optimize_plan failed 5 times at {self.path}"
-            ) from last
-        per_bucket: dict[int, dict] = {}
-        for a in active.values():
-            b = int(a["partitionValues"]["bucket"])
-            st = json.loads(a["stats"])
-            d = per_bucket.setdefault(b, bucket_counters(b))
-            if self._is_mor(a):
-                d["delta_files"] += 1
-                d["delta_records"] += st["numRecords"]
-                d["delta_removes"] += st.get("numRemoves", 0)
-                if st["numRecords"] < small_file_rows:
-                    d["small_delta_files"] += 1
-            else:
-                d["base_files"] += 1
-                d["base_records"] += st["numRecords"]
-        return optimize_decisions(
-            self.spark, per_bucket, min_small_files, tombstone_pct
-        )
-
-    def compact_mor(
-        self, buckets: set[int], key: str | None = None, max_attempts: int = 5
-    ) -> None:
-        """Execute an optimize_plan decision: fold the selected
-        buckets' pending delta files into rewritten base files (one
-        commit, loser-retry like compact — the retry recomputes the
-        candidate set from the winner's state). Folded REMOVE entries
-        become base tombstones, which the settled-tombstone OPTIMIZE
-        (compact) reclaims once the reorder horizon passes. ``key``
-        defaults to the table's persisted mergeKey."""
-        for _ in range(max_attempts):
-            v = self.latest_version() + 1
-            try:
-                schema_json, config, active = self._state()
-            except (ValueError, FileNotFoundError):
-                continue  # expiry truncated the log under us: re-pin
-            key = key or config.get("mergeKey", "key")
-            cand = [
-                a
-                for a in active.values()
-                if int(a["partitionValues"]["bucket"]) in buckets
-            ]
-            if not any(self._is_mor(a) for a in cand):
-                return  # nothing pending: no no-op commit
-            folded = self._fold_adds(cand, schema_json, key=key)
-            adds = self._write_data(
-                folded.withColumn("bucket", self._bucket(F.col(key))), v
-            )
-            try:
-                self._commit(
-                    v,
-                    [
-                        {"commitInfo": {"operation": "OPTIMIZE"}},
-                        *(
-                            {"remove": {"path": a["path"], "dataChange": False,
-                                         "deletionTimestamp": _now_ms()}}
-                            for a in cand
-                        ),
-                        *({"add": a} for a in adds),
-                    ],
-                )
-                return
-            except FileExistsError:
-                continue  # lost the race: recompute candidates
-        raise RuntimeError(
-            f"MOR OPTIMIZE lost the commit race {max_attempts} times at {self.path}"
-        )
+        return adds
 
     # -- VersionedSinkFormat --------------------------------------------
-
-    def changes_between(self, v_from: int, v_to: int) -> DataFrame:
-        """CDF read: a bucket whose FILE SET is identical at both
-        versions is provably unchanged (immutable files) and is never
-        read; only differing buckets are scanned from each side, then
-        `diff_states` classifies INSERT/UPDATE/DELETE — the same
-        classification text the native versioned sink uses."""
-        # only the FROM-side file set matters: both sides FOLD under
-        # the TO schema below (schemas only widen)
-        _s_from, _c_from, a_from = self._state(v_from)
-        s_to, c_to, a_to = self._state(v_to)
-        key = c_to.get("mergeKey", "key")
-
-        def by_bucket(active: dict[str, dict]) -> dict[int, set[str]]:
-            out: dict[int, set[str]] = {}
-            for p, a in active.items():
-                out.setdefault(int(a["partitionValues"]["bucket"]), set()).add(p)
-            return out
-
-        bb_from, bb_to = by_bucket(a_from), by_bucket(a_to)
-        changed = {
-            b
-            for b in set(bb_from) | set(bb_to)
-            if bb_from.get(b, set()) != bb_to.get(b, set())
-        }
-        side_from = [a for a in a_from.values()
-                     if int(a["partitionValues"]["bucket"]) in changed]
-        side_to = [a for a in a_to.values()
-                   if int(a["partitionValues"]["bucket"]) in changed]
-        # BOTH sides fold under the TO schema (schemas only widen, so
-        # it covers the FROM side; pre-evolution files null-fill) and
-        # the feed carries every TO-side payload column — a consumer
-        # mirroring through the feed must converge to visible(), new
-        # columns included (round-10 review)
-        a = visible(self._fold_adds(side_from, s_to, key=key))
-        b = visible(self._fold_adds(side_to, s_to, key=key))
-        return diff_states(a, b, payload_cols=payload_cols_of(s_to, key), key=key)
 
     def expire_versions(
         self,
@@ -854,79 +410,54 @@ class DeltaLogSink:
         schema_at_horizon = None
         config_at_horizon: dict = {}
         active_at_horizon: dict[str, dict] = {}
-        schema: str | None = None
-        config: dict = {}
-        active: dict[str, dict] = {}
+        r = _Replay()
         start = 1
         ck0 = self._newest_checkpoint_at_most(on_disk[0])
         if ck0 is not None:
-            with open(self._ckpt_path(ck0)) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        schema = a["metaData"]["schemaString"]
-                        config = a["metaData"].get("configuration", {})
-                    elif "add" in a:
-                        active[a["add"]["path"]] = a["add"]
+            r.read(self._ckpt_path(ck0))
             start = ck0 + 1
-            all_refs.update(active)
+            all_refs.update(r.active)
             # ck0 < horizon always holds here: ck0 is the previous
             # horizon, and a wider keep_last would have early-returned
         for v in range(start, latest + 1):
-            with open(self._log_path(v)) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        schema = a["metaData"]["schemaString"]
-                        config = a["metaData"].get("configuration", {})
-                    elif "add" in a:
-                        active[a["add"]["path"]] = a["add"]
-                        all_refs.add(a["add"]["path"])
-                    elif "remove" in a:
-                        active.pop(a["remove"]["path"], None)
-                        removed_ms[a["remove"]["path"]] = a["remove"].get(
-                            "deletionTimestamp", 0
-                        )  # legacy actions without the stamp: aged
+            for a in r.read(self._log_path(v)):
+                if "add" in a:
+                    all_refs.add(a["add"]["path"])
+                elif "remove" in a:
+                    removed_ms[a["remove"]["path"]] = a["remove"].get(
+                        "deletionTimestamp", 0
+                    )  # legacy actions without the stamp: aged
             if v == horizon:
-                schema_at_horizon = schema
-                config_at_horizon = dict(config)
-                active_at_horizon = dict(active)
+                schema_at_horizon = r.schema
+                config_at_horizon = dict(r.config)
+                active_at_horizon = dict(r.active)
             if v >= horizon:
-                keep_files.update(active)
-        ck = self._ckpt_path(horizon)
-        # attempt-scoped tmp names (same rule as every other staging
-        # path): two concurrent expiries sharing a tmp would race the
-        # final os.replace and the loser crashes on its consumed tmp
-        ck_tmp = ck + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(ck_tmp, "w") as fh:
-            fh.write(
-                json.dumps(
-                    {
-                        "metaData": {
-                            "schemaString": schema_at_horizon,
-                            # mergeKey must survive log truncation or
-                            # post-expiry reads fold on the wrong key
-                            "configuration": config_at_horizon,
-                        }
+                keep_files.update(r.active)
+        # an empty checkpoint after the expired commits are gone would
+        # replay to an EMPTY active set: written durably, then pointed at
+        self._replace_synced(
+            self._ckpt_path(horizon),
+            json.dumps(
+                {
+                    "metaData": {
+                        "schemaString": schema_at_horizon,
+                        # mergeKey must survive log truncation or
+                        # post-expiry reads fold on the wrong key
+                        "configuration": config_at_horizon,
                     }
-                )
-                + "\n"
+                }
             )
-            for a in active_at_horizon.values():
-                fh.write(json.dumps({"add": a}) + "\n")
-            fh.flush()
-            os.fsync(fh.fileno())  # an empty checkpoint after the
-            # expired commits are gone replays to an EMPTY active set
-        os.replace(ck_tmp, ck)
-        # pointer write is torn-read-safe: tmp + atomic rename (readers
-        # additionally tolerate a corrupt pointer, _newest_checkpoint_at_most)
-        lc = os.path.join(self._log_dir(), "_last_checkpoint")
-        lc_tmp = lc + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(lc_tmp, "w") as fh:
-            json.dump({"version": horizon}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(lc_tmp, lc)
+            + "\n"
+            + "".join(
+                json.dumps({"add": a}) + "\n" for a in active_at_horizon.values()
+            ),
+        )
+        # readers additionally tolerate a corrupt pointer
+        # (_newest_checkpoint_at_most)
+        self._replace_synced(
+            os.path.join(self._log_dir(), "_last_checkpoint"),
+            json.dumps({"version": horizon}),
+        )
         # superseded checkpoints must go WITH their commits: a stale
         # checkpoint below the horizon would let _state resolve an
         # expired version against vacuumed files instead of raising
@@ -936,59 +467,17 @@ class DeltaLogSink:
         for v in expired:
             os.remove(self._log_path(v))
         # VACUUM retention (Delta's deletedFileRetentionDuration): a
-        # dead file is reclaimable only once its remove action is older
-        # than the grace — mtime is useless here (the file was WRITTEN
-        # long ago; what must age is its TOMBSTONING). A spared file's
-        # deletionTimestamp dies with the expired commit this same call
-        # removes, so sparing also TOUCHES the file: the later orphan
-        # sweep's mtime grace then restarts from the sparing moment
-        # (>= the tombstoning) instead of the long-past write.
-        retention_cutoff_ms = (time.time() - orphan_grace_s) * 1000
-        for rel in sorted(all_refs - keep_files):
-            full = os.path.join(self.path, rel)
-            if removed_ms.get(rel, 0) > retention_cutoff_ms:
-                try:
-                    os.utime(full)
-                except FileNotFoundError:
-                    pass  # vanished: nothing to spare
-                # any other failure propagates: silently keeping the
-                # ancient write-mtime would arm the NEXT sweep to
-                # reclaim this file inside its tombstone grace
-                continue
-            if os.path.exists(full):
-                os.remove(full)
+        # dead file's death is its remove action's deletionTimestamp
+        self._reclaim_dead(all_refs - keep_files, removed_ms, orphan_grace_s)
         if sweep_orphans:
-            cutoff = time.time() - orphan_grace_s
-
-            def aged_out(full: str) -> bool:
-                try:
-                    return os.path.getmtime(full) <= cutoff
-                except OSError:
-                    return False  # vanished mid-sweep: nothing to do
-
-            data_root = os.path.join(self.path, "files")
-            for dirpath, _dirs, files in os.walk(data_root):
-                for fn in files:
-                    full = os.path.join(dirpath, fn)
-                    rel = os.path.relpath(full, self.path)
-                    if (
-                        fn.endswith(".parquet")
-                        and rel not in keep_files
-                        and aged_out(full)
-                    ):
-                        os.remove(full)
             # attempt-scoped staging debris in _delta_log (crashed
             # commit .tmp-<uuid>, checkpoint/_last_checkpoint
             # *.tmp-<uuid>) is never consumed by a later attempt — each
-            # retry stages under a fresh name — so without this sweep it
-            # accumulates forever (the Iceberg sink reclaims its hint
-            # tmps the same way). Real log objects never contain
+            # retry stages under a fresh name — so without the sweep it
+            # accumulates forever. Real log objects never contain
             # ".tmp-"; the age floor spares in-flight attempts about to
             # be linked/replaced.
-            for fn in os.listdir(self._log_dir()):
-                full = os.path.join(self._log_dir(), fn)
-                if ".tmp-" in fn and aged_out(full):
-                    os.remove(full)
+            self._sweep_orphans(keep_files, orphan_grace_s, lambda fn: ".tmp-" in fn)
         return expired
 
 
@@ -1006,55 +495,16 @@ def _register_delta_fold() -> None:
     from ..operators.cdc import changelog, fold_changelog, with_changelog
     from ..registry import register, tracked_persist
 
-    @register(
-        "q_cdc_delta_log_fold",
-        oracle=with_changelog(
-            """
-SELECT key, seq_no AS last_seq, payload_value
-FROM (
-    SELECT key, seq_no, op, payload_value,
-           row_number() OVER (PARTITION BY key ORDER BY seq_no DESC) AS rn
-    FROM changelog
-) WHERE rn = 1 AND op <> 'REMOVE'
-"""
-        ),
-    )
+    @register("q_cdc_delta_log_fold", oracle=with_changelog(LOG_FOLD_ORACLE))
     def q_cdc_delta_log_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """The Delta-protocol table format end to end under one oracle
-        hash: init = fold of the changelog's first third, two MERGE
-        commits (bucket-pruned, loser-retry protocol), an OPTIMIZE past
-        the full reorder horizon (settled tombstones rewritten away),
-        then retention to the last two versions (checkpoint + commit
-        truncation + vacuum with orphan sweep). What survives all four
-        maintenance operations must still equal the plain changelog
-        fold — the PITR identity (`state-machine.json` restore path)
-        expressed through the log-structured format rather than the
-        manifest format (q_cdc_snapshot_rebuild / q_cdc_time_travel
-        twins)."""
-        cl = changelog(spark, sf_dir).select(
-            "seq_no", "op", "key", "payload_value"
-        )
-        max_seq = cl.agg(F.max("seq_no")).first()[0]  # orchestration scalar
-        c1, c2 = max_seq // 3, (2 * max_seq) // 3
-        base = tempfile.mkdtemp(prefix="deltafold-")
-        sink = DeltaLogSink(spark, os.path.join(base, "t"))
-        # NO width pin: the MERGE commits and the compact rewrite are
-        # real per-bucket merges over the full table — compute-bound
-        # (r16 idle-32 A/B: pinned 8.90 s vs session width 4.04 s)
-        sink.init(fold_changelog(cl.where(F.col("seq_no") <= c1)))
-        sink.apply_batch(
-            cl.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
-        )
-        sink.apply_batch(cl.where(F.col("seq_no") > c2))
-        sink.compact(reorder_horizon_seq=int(max_seq) + 1)
-        # grace 0 is safe here: this builder is the table's only writer
-        sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
-        result = tracked_persist(
-            sink.visible().select("key", "last_seq", "payload_value")
-        )
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
-        return result
+        """The Delta-protocol table format end to end (`_log_fold_drill`):
+        init, two bucket-pruned MERGE commits, an OPTIMIZE past the full
+        reorder horizon, then retention to the last two versions
+        (checkpoint + commit truncation + vacuum with orphan sweep) —
+        the PITR identity expressed through the log-structured format
+        rather than the manifest format (q_cdc_snapshot_rebuild /
+        q_cdc_time_travel twins)."""
+        return _log_fold_drill(spark, sf_dir, DeltaLogSink)
 
     @register(
         "q_cdc_delta_schema_evolution",
@@ -1096,7 +546,7 @@ FROM (
         sink = DeltaLogSink(spark, os.path.join(base, "t"))
         narrow = cl.drop("payload_props")
         # NO width pin: MERGE commits are compute-bound (see
-        # q_cdc_delta_log_fold; r16 idle-32 A/B 4.48 s → 3.68 s)
+        # _log_fold_drill; r16 idle-32 A/B 4.48 s → 3.68 s)
         sink.init(fold_changelog(narrow.where(F.col("seq_no") <= c1)))
         sink.apply_batch(
             narrow.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))

@@ -62,6 +62,14 @@ lose cleanly. Everything query code touches flows through the SinkFormat /
 CompactingSinkFormat / VersionedSinkFormat protocols — the behavior
 suite `tests/test_sink_format.py` runs unmodified against this class.
 
+Everything above the metadata encoding — the pin-before-read commit
+loop, the merge-on-read fold, MERGE/rewriteDataFiles/append/changefeed
+and the retention GC — is `table_files.LogTableSink`, shared with the
+Delta sink; this module holds only the tree: metadata files and the
+version hint, manifest lists and manifests, schema history, the append
+lane's data/equality-delete split, manifest repacking and metadata
+retention.
+
 Reference parity: the snapshot list IS the PITR identity the reference
 implements with PITR export + stream replay (`state-machine.json`
 restore path); `snapshot(v)` is its point-in-time restore,
@@ -82,28 +90,17 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cdc import cdc_merge_tombstone, visible
 from .table_files import (
-    align_to_payloads,
-    bucket_counters,
-    empty_frame,
-    evolve_schema_json,
-    optimize_decisions,
-    payload_cols_of,
-    read_with_schema,
-    write_bucketed_files,
+    LOG_FOLD_ORACLE,
+    ORPHAN_GRACE_DEFAULT_S,
+    DataFileInfo,
+    LiveFile,
+    LogTableSink,
+    TableState,
+    _log_fold_drill,
 )
-from .versioned_sink import diff_states
 
 META_DIR = "metadata"
-N_BUCKETS_DEFAULT = 32
-# Orphan sweep ignores files younger than this (Iceberg's
-# remove-orphan-files olderThan, default 3 days there): an in-flight
-# commit attempt writes its data/manifest files BEFORE the metadata
-# CAS, so without an age floor a concurrent expiry would delete them
-# and the attempt, on winning, would publish metadata referencing
-# deleted files (round-8 review finding).
-ORPHAN_GRACE_DEFAULT_S = 300.0
 # expired metadata files retained for racing writers (Iceberg's
 # write.metadata.previous-versions-max): a writer that pinned its
 # target number just before an expiry commit must still be able to
@@ -382,42 +379,32 @@ def _entry_count(manifests: list[dict]) -> int:
     )
 
 
-class IcebergLogSink:
+class IcebergLogSink(LogTableSink):
     """VersionedSinkFormat + CompactingSinkFormat over an Iceberg-shaped
-    metadata tree. See module docstring for the protocol."""
+    metadata tree. See module docstring for the protocol; the protocol
+    methods are LogTableSink's."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        n_buckets: int = N_BUCKETS_DEFAULT,
-        transform: str = "bucket",
-    ):
-        """`transform` picks the partition transform: "bucket"
-        (hash-mod, default) or "mod" (identity-mod — reproducible by
-        external engines; the optimize-plan oracle uses key % N). Only
-        init CONSUMES these arguments: an existing table's transform
-        (and width) is read back from its persisted partition spec, so
-        a fresh handle — or an external engine reading the spec — can
-        never mis-bucket a table created with different parameters
-        (round-9 review; same rule as the persisted merge key)."""
-        self.spark = spark
-        self.path = path
-        self.n_buckets = n_buckets
-        self._transform_arg = transform
-        self._transform_cached: tuple[str, int] | None = None
-        os.makedirs(os.path.join(path, META_DIR), exist_ok=True)
+    _LOG_DIR = META_DIR
+    _DATA_DIR = "data"
+    _DATA_PREFIX = "s"
+    # a racing expiry GC'd the pinned metadata file (or a manifest under
+    # it) mid-read
+    _VANISHED = (FileNotFoundError,)
+    _APPEND_RESOLVE = "append metadata resolution"
+    _EMPTY_APPEND_COMMITS = False
+    _OPERATIONS = {"merge": "overwrite", "rewrite": "replace", "append": "append"}
+
+    @staticmethod
+    def _no_table(e: Exception) -> bool:
+        return isinstance(e, ValueError)  # "no table metadata"
 
     # -- metadata-tree plumbing -------------------------------------------
 
-    def _meta_dir(self) -> str:
-        return os.path.join(self.path, META_DIR)
-
     def _meta_path(self, n: int) -> str:
-        return os.path.join(self._meta_dir(), f"v{n:020d}.metadata.json")
+        return os.path.join(self._log_dir(), f"v{n:020d}.metadata.json")
 
     def _hint_path(self) -> str:
-        return os.path.join(self._meta_dir(), "version-hint.text")
+        return os.path.join(self._log_dir(), "version-hint.text")
 
     def _latest_meta_num(self) -> int:
         """Newest metadata file number. version-hint is only a START
@@ -425,31 +412,26 @@ class IcebergLogSink:
         between link and hint move leaves the hint one behind, and
         trusting it verbatim would wedge the commit loop in EEXIST);
         a missing/torn hint falls back to a directory listing."""
-        start = 0
-        try:
-            with open(self._hint_path()) as fh:
-                start = int(fh.read().strip())
-        except (OSError, ValueError):
+        def listed() -> int:
             nums = [
                 int(m.group(1))
-                for f in os.listdir(self._meta_dir())
+                for f in os.listdir(self._log_dir())
                 if (m := re.fullmatch(r"v(\d+)\.metadata\.json", f))
             ]
             if not nums:
                 raise ValueError(f"no table metadata in {self.path}") from None
-            start = max(nums)
+            return max(nums)
+
+        try:
+            with open(self._hint_path()) as fh:
+                start = int(fh.read().strip())
+        except (OSError, ValueError):
+            start = listed()
         if start < 1 or not os.path.exists(self._meta_path(start)):
             # a PARSABLE hint can still be stale-and-deleted (expiry GC
             # raced the read): the listing is the recovery path there
             # too, not only for a torn hint
-            nums = [
-                int(m.group(1))
-                for f in os.listdir(self._meta_dir())
-                if (m := re.fullmatch(r"v(\d+)\.metadata\.json", f))
-            ]
-            if not nums:
-                raise ValueError(f"no table metadata in {self.path}")
-            start = max(nums)
+            start = listed()
         n = start
         while os.path.exists(self._meta_path(n + 1)):
             n += 1
@@ -465,27 +447,11 @@ class IcebergLogSink:
         success the version hint moves via atomic rename — a crash
         between link and rename only makes the hint stale, which
         _latest_meta_num's forward probe absorbs."""
-        tmp = os.path.join(self._meta_dir(), f".tmp-{uuid.uuid4().hex[:12]}")
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, self._meta_path(n))
-        finally:
-            os.remove(tmp)
-        # attempt-scoped tmp name: two committers moving the hint
-        # concurrently must not share a staging path, or the loser's
-        # os.replace finds its tmp already consumed (FileNotFoundError —
-        # reproduced by the threaded race suite). Concurrent replaces of
-        # the hint itself are benign: the hint is only a probe START and
-        # staleness is tolerated by _latest_meta_num.
-        hint_tmp = self._hint_path() + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(hint_tmp, "w") as fh:
-            fh.write(str(n))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(hint_tmp, self._hint_path())
+        self._link_publish(self._meta_path(n), json.dumps(meta))
+        # concurrent replaces of the hint itself are benign: the hint is
+        # only a probe START and staleness is tolerated by
+        # _latest_meta_num
+        self._replace_synced(self._hint_path(), str(n))
 
     def _write_ndjson(self, prefix: str, rows: list[dict]) -> str:
         """Immutable uuid-named NDJSON metadata object, gzip-compressed
@@ -583,74 +549,6 @@ class IcebergLogSink:
                     out.append(e)
         return out
 
-    # -- data plumbing ------------------------------------------------------
-
-    def _transform(self) -> tuple[str, int]:
-        """(name, N) of the table's partition transform — the persisted
-        partition-spec value first (a fresh handle must follow the
-        TABLE's layout, not its constructor defaults), constructor
-        fallback only before the table exists (init)."""
-        if self._transform_cached is not None:
-            return self._transform_cached
-        fallback = (self._transform_arg, self.n_buckets)
-        last: Exception | None = None
-        for _ in range(5):
-            try:
-                meta = self._current_meta()
-                break
-            except ValueError:
-                return fallback  # "no table metadata": init is writing
-                # it — don't cache, so post-init reads re-resolve
-            except FileNotFoundError as e:
-                last = e
-                continue  # expiry GC'd the pinned metadata file mid-read:
-                # falling back HERE would silently mis-bucket — retry
-        else:
-            raise RuntimeError(
-                f"transform resolution failed 5 times at {self.path}"
-            ) from last
-        m = re.fullmatch(
-            r"(bucket|mod)\[(\d+)\]", meta["partition-spec"][0]["transform"]
-        )
-        self._transform_cached = (m.group(1), int(m.group(2))) if m else fallback
-        return self._transform_cached
-
-    def _bucket(self, key_col):
-        name, n = self._transform()
-        hashed = key_col if name == "mod" else F.hash(key_col)
-        return F.pmod(hashed, F.lit(n)).alias("bucket")
-
-    def _write_data(self, bucketed: DataFrame, seq: int) -> list[dict]:
-        """Write one commit ATTEMPT's data files (table_files shared
-        physics: immutable attempt-scoped dir, so a crashed or
-        race-losing attempt can never collide with a retry) and shape
-        the per-file facts into Iceberg manifest entries."""
-        rel_dir = os.path.join("data", f"s{seq:06d}-{uuid.uuid4().hex[:8]}")
-        return [
-            {
-                "status": "ADDED",
-                "data_file": {
-                    "file_path": i.rel_path,
-                    "partition": {"bucket": i.bucket},
-                    "record_count": i.num_rows,
-                    "file_size_in_bytes": i.size_bytes,
-                    "lower_bounds": i.mins,
-                    "upper_bounds": i.maxs,
-                },
-            }
-            for i in write_bucketed_files(bucketed, self.path, rel_dir)
-        ]
-
-    def _read_entries(self, entries: list[dict], schema_json: str) -> DataFrame:
-        if not entries:
-            return empty_frame(self.spark, schema_json)
-        paths = sorted(e["data_file"]["file_path"] for e in entries)
-        # schema-on-read (Iceberg projects by column id, we project by
-        # name; same null-fill result for pre-evolution files)
-        return read_with_schema(
-            self.spark, schema_json, [os.path.join(self.path, p) for p in paths]
-        )
-
     @staticmethod
     def _is_pending(e: dict) -> bool:
         """True for merge-on-read files awaiting a rewrite: appended
@@ -659,29 +557,6 @@ class IcebergLogSink:
         return (
             e.get("tags", {}).get("mor") == "true"
             or e["data_file"].get("content", "data") != "data"
-        )
-
-    def _fold_entries(
-        self, entries: list[dict], schema_json: str, key: str = "key"
-    ) -> DataFrame:
-        """Tombstoned state of a set of manifest entries, folding
-        pending merge-on-read files (appended data + equality-delete
-        files) over the base files at read time. With nothing pending
-        this is a plain read — zero overhead for copy-on-write tables.
-        The per-key max-seq reduction is associative/commutative, so
-        folding ALL pending entries in one merge ≡ applying their
-        commits one by one (the same algebra the Delta sink's
-        _fold_adds relies on, tests/test_cdc_property.py)."""
-        base = [e for e in entries if not self._is_pending(e)]
-        pending = [e for e in entries if self._is_pending(e)]
-        cur = self._read_entries(base, schema_json)
-        if not pending:
-            return cur
-        rows = self._read_entries(pending, schema_json).withColumnRenamed(
-            "last_seq", "seq_no"
-        )
-        return cdc_merge_tombstone(
-            cur, rows, key=key, payload_cols=payload_cols_of(schema_json, key)
         )
 
     def _merge_key(self, meta: dict) -> str:
@@ -831,15 +706,87 @@ class IcebergLogSink:
         snap.setdefault("schema-id", meta.get("current-schema-id", 0))
         self._commit_meta(meta_num, new_meta)
 
-    # -- SinkFormat -----------------------------------------------------------
+    def latest_version(self) -> int:
+        meta = self._current_meta()
+        if not meta["snapshots"]:
+            raise ValueError(f"no snapshots in {self.path}")
+        return meta["snapshots"][-1]["sequence-number"]
 
-    def init(self, snapshot: DataFrame, key: str = "key") -> None:
-        snap = snapshot
-        if "op" not in snap.columns:
-            snap = snap.withColumn("op", F.lit("INSERT"))
-        schema_json = snap.schema.json()
-        bucketed = snap.withColumn("bucket", self._bucket(F.col(key)))
-        entries = self._write_data(bucketed, 1)
+
+    # -- the log encoding of the shared core --------------------------------
+
+    @classmethod
+    def _live(cls, e: dict) -> LiveFile:
+        d = e["data_file"]
+        return LiveFile(
+            path=d["file_path"],
+            bucket=d["partition"]["bucket"],
+            pending=cls._is_pending(e),
+            records=d["record_count"],
+            lower=d.get("lower_bounds", {}),
+            upper=d.get("upper_bounds", {}),
+            # an equality-delete file's record_count IS its remove count
+            removes=(
+                d["record_count"] if d.get("content") == "equality-deletes" else 0
+            ),
+        )
+
+    def _persisted_transform(self) -> str:
+        return self._current_meta()["partition-spec"][0]["transform"]
+
+    def _pin(self) -> int:
+        return self._latest_meta_num() + 1
+
+    def _pinned(self, slot: int | None, buckets: set[int] | None = None) -> TableState:
+        # the base is the metadata file just below the pinned number: a
+        # commit landing after the pin claims that number (EEXIST)
+        n = self._latest_meta_num() if slot is None else slot - 1
+        meta = self._load_meta(n)
+        prev = self._snapshot_record(meta, None)
+        return TableState(
+            meta["schema"],
+            self._merge_key(meta),
+            # two-level manifest pruning to the requested buckets
+            [self._live(e) for e in self._entries(prev, buckets)],
+            slot=n + 1,
+            seq=prev["sequence-number"] + 1,
+            base=(meta, prev),
+        )
+
+    def _versions(self, *versions: int | None) -> list[TableState]:
+        # one metadata read resolves every version: no replay
+        meta = self._current_meta()
+        snaps = [self._snapshot_record(meta, v) for v in versions]
+        key = self._merge_key(meta)
+        return [
+            TableState(
+                # the schema in effect AT the snapshot: time travel below
+                # an add-column evolution must not show the later column
+                # (Iceberg's snapshot schema-id)
+                self._schema_at(meta, s),
+                key,
+                [self._live(e) for e in self._entries(s)],
+            )
+            for s in snaps
+        ]
+
+    def _file_record(self, i: DataFileInfo) -> dict:
+        """One data file as an Iceberg manifest entry."""
+        return {
+            "status": "ADDED",
+            "data_file": {
+                "file_path": i.rel_path,
+                "partition": {"bucket": i.bucket},
+                "record_count": i.num_rows,
+                "file_size_in_bytes": i.size_bytes,
+                "lower_bounds": i.mins,
+                "upper_bounds": i.maxs,
+            },
+        }
+
+    def _create(
+        self, schema_json: str, key: str, transform: str, entries: list[dict]
+    ) -> None:
         meta = {
             "format-version": 2,
             "table-uuid": uuid.uuid4().hex,
@@ -847,9 +794,7 @@ class IcebergLogSink:
             "schemas": [{"schema-id": 0, "schema": schema_json}],
             "current-schema-id": 0,
             "partition-spec": [
-                {"name": "bucket",
-                 "transform": f"{self._transform_arg}[{self.n_buckets}]",
-                 "source": key}
+                {"name": "bucket", "transform": transform, "source": key}
             ],
             "snapshots": [],
             "current-snapshot-id": None,
@@ -857,290 +802,51 @@ class IcebergLogSink:
         snap_rec = self._build_snapshot(None, set(), entries, "append")
         self._commit_snapshot(1, meta, snap_rec)
 
-    def apply_batch(
-        self, batch: DataFrame, key: str = "key", max_attempts: int = 5
+    def _publish(
+        self,
+        state: TableState,
+        op: str,
+        removed: list[LiveFile],
+        added: list[dict],
+        schema_json: str | None,
     ) -> None:
-        """MERGE INTO: resolve the batch against ONLY the files of the
-        buckets it touches (two-level manifest pruning), write
-        replacement files, publish one new snapshot whose manifest list
-        reuses every untouched manifest.
-
-        Optimistic concurrency, the HadoopTableOperations loser rule:
-        the target metadata number is pinned BEFORE the state read (a
-        commit landing anywhere after the pin claims our number and
-        forces EEXIST); on a lost race the whole merge recomputes
-        against the winner's state — publishing the stale removed-file
-        set would resurrect the winner's rows as duplicates."""
-        batch = batch.withColumn("bucket", self._bucket(F.col(key)))
-        touched = {
-            r.bucket for r in batch.select("bucket").distinct().collect()
-        }  # ≤ N ints: orchestration, not data
-        for _ in range(max_attempts):
-            meta_num = self._latest_meta_num() + 1
-            try:
-                meta = self._load_meta(meta_num - 1)
-                prev = self._snapshot_record(meta, None)
-                cand = self._entries(prev, buckets=touched)
-            except FileNotFoundError:
-                continue  # expiry GC'd our base metadata: re-pin and retry
-            # add-column schema evolution (union-by-name): a batch
-            # carrying payload columns the table doesn't know widens
-            # the schema in the SAME commit (a new schema-id in the
-            # metadata file's schema history). Evolved inside the retry
-            # loop so a racing writer's own evolution is unioned on
-            # recompute, never overwritten.
-            schema_json, evolved = evolve_schema_json(
-                meta["schema"], batch.schema, key
-            )
-            if evolved:
-                meta = self._apply_schema(meta, schema_json)
-            # _fold_entries (not a raw read): a touched bucket may carry
-            # pending merge-on-read files, which this commit retires by
-            # folding them into the rewritten base files
-            current = self._fold_entries(cand, schema_json, key=key)
-            merged = cdc_merge_tombstone(
-                current,
-                align_to_payloads(batch.drop("bucket"), schema_json, key),
-                key=key,
-                payload_cols=payload_cols_of(schema_json, key),
-            )
-            entries = self._write_data(
-                merged.withColumn("bucket", self._bucket(F.col(key))),
-                prev["sequence-number"] + 1,
-            )
-            removed = {e["data_file"]["file_path"] for e in cand}
-            snap_rec = self._build_snapshot(prev, removed, entries, "overwrite")
-            try:
-                self._commit_snapshot(meta_num, meta, snap_rec)
-                return
-            except FileExistsError:
-                continue  # lost the race: recompute against the new state
-        raise RuntimeError(
-            f"MERGE lost the commit race {max_attempts} times at {self.path}"
+        """One snapshot whose manifest list reuses every untouched
+        manifest; an evolved schema joins the schema history in the
+        same metadata file."""
+        meta, prev = state.base
+        if schema_json is not None:
+            meta = self._apply_schema(meta, schema_json)
+        snap_rec = self._build_snapshot(
+            prev, {f.path for f in removed}, added, self._OPERATIONS[op]
         )
+        self._commit_snapshot(state.slot, meta, snap_rec)
 
-    def snapshot(self, version: int | None = None) -> DataFrame:
-        """Tombstoned state at a snapshot — time travel is reading an
-        older snapshot's manifest tree (no replay; one metadata read).
-        Pending merge-on-read files are folded here too: snapshot() is
-        the STATE contract (one row per key, tombstones as rows),
-        whatever the physical layout — visible(snapshot(v)) must never
-        show duplicate or resurrected keys (round-7 review finding on
-        the Delta sink; same rule under this protocol)."""
-        meta = self._current_meta()
-        snap = self._snapshot_record(meta, version)
-        return self._fold_entries(
-            self._entries(snap),
-            self._schema_at(meta, snap),  # the schema in effect AT the
-            # snapshot: time travel below an add-column evolution must
-            # not show the later column (Iceberg's snapshot schema-id)
-            key=self._merge_key(meta),
-        )
+    def _write_pending(self, rows: DataFrame, key: str, seq: int) -> list[dict]:
+        """The Iceberg v2 row-level-delete WRITE: upsert rows become data
+        files (content=data), REMOVE rows EQUALITY-DELETE files
+        (content=equality-deletes, ``equality_ids`` = the merge-key
+        field), the spec's delete-file container.
 
-    def visible(self) -> DataFrame:
-        return visible(self.snapshot())
-
-    def latest_version(self) -> int:
-        meta = self._current_meta()
-        if not meta["snapshots"]:
-            raise ValueError(f"no snapshots in {self.path}")
-        return meta["snapshots"][-1]["sequence-number"]
-
-    # -- CompactingSinkFormat -------------------------------------------------
-
-    def compact(self, reorder_horizon_seq: int, max_attempts: int = 5) -> None:
-        """rewriteDataFiles analog: rewrite files that may hold settled
-        tombstones (op='REMOVE' below the reorder horizon), dropping
-        them. Candidates come from manifest-entry BOUNDS only — a file
-        whose op range excludes 'REMOVE' or whose min last_seq is above
-        the horizon is provably clean and never opened. Bounds admit
-        false positives (a post-merge file mixing live rows with a
-        FRESH tombstone passes forever), so an exact emptiness check
-        gates the commit — without it periodic OPTIMIZE would rewrite
-        such buckets and grow the snapshot list unboundedly.
-
-        Same pin-before-read loser-retry as apply_batch."""
-        for _ in range(max_attempts):
-            meta_num = self._latest_meta_num() + 1
-            try:
-                meta = self._load_meta(meta_num - 1)
-                prev = self._snapshot_record(meta, None)
-            except FileNotFoundError:
-                continue  # expiry GC'd our base metadata: re-pin and retry
-            all_entries = self._entries(prev)
-            mor_buckets = {
-                e["data_file"]["partition"]["bucket"]
-                for e in all_entries
-                if self._is_pending(e)
-            }
-
-            def may_hold_settled(e: dict) -> bool:
-                if self._is_pending(e):
-                    # a REMOVE row in a pending file is a changelog ENTRY
-                    # (or an equality delete), not a folded tombstone:
-                    # compact_mor retires these, never this path
-                    return False
-                if e["data_file"]["partition"]["bucket"] in mor_buckets:
-                    # the whole BUCKET is ineligible while merge-on-read
-                    # files are pending: a pending entry may sit BELOW a
-                    # settled base tombstone's seq (stale entries are
-                    # supported), and dropping that tombstone would hand
-                    # the read-time fold to the stale entry — a silently
-                    # resurrected key (the Delta sink's round-8 defect;
-                    # guarded identically under this protocol)
-                    return False
-                lo, hi = e["data_file"]["lower_bounds"], e["data_file"]["upper_bounds"]
-                if "op" not in lo:
-                    return True  # no bounds: conservative
-                if not (lo["op"] <= "REMOVE" <= hi["op"]):
-                    return False
-                return lo.get("last_seq") is None or lo["last_seq"] < reorder_horizon_seq
-
-            cand = [e for e in all_entries if may_hold_settled(e)]
-            if not cand:
-                return
-            cur = self._read_entries(cand, meta["schema"])
-            settled = (F.col("op") == "REMOVE") & (
-                F.col("last_seq") < reorder_horizon_seq
-            )
-            if cur.where(settled).limit(1).count() == 0:
-                return
-            kept = cur.where(~settled)
-            # the merge key is the partition-spec SOURCE field (persisted
-            # by init) — hardcoding "key" crashed compact on tables
-            # created with a custom key (round-8 review; the Delta sink's
-            # mergeKey fix never reached this path)
-            key = meta["partition-spec"][0]["source"]
-            entries = self._write_data(
-                kept.withColumn("bucket", self._bucket(F.col(key))),
-                prev["sequence-number"] + 1,
-            )
-            removed = {e["data_file"]["file_path"] for e in cand}
-            snap_rec = self._build_snapshot(prev, removed, entries, "replace")
-            try:
-                self._commit_snapshot(meta_num, meta, snap_rec)
-                return
-            except FileExistsError:
-                continue  # lost the race: recompute candidates
-        raise RuntimeError(
-            f"OPTIMIZE lost the commit race {max_attempts} times at {self.path}"
-        )
-
-    # -- merge-on-read ingest lane ----------------------------------------
-
-    def append(
-        self, batch: DataFrame, key: str | None = None, max_attempts: int = 5
-    ) -> None:
-        """Blind-append ingest, the Iceberg v2 row-level-delete WRITE:
-        the batch's changelog entries land in one commit with NO reads
-        and NO removed files — O(batch) regardless of table size.
-        Upsert rows become data files (content=data); REMOVE rows
-        become EQUALITY-DELETE files (content=equality-deletes,
-        ``equality_ids`` = the merge-key field), the spec's delete-file
-        container. Appends never conflict semantically, so a lost race
-        rebuilds only the manifest list against the winner's snapshot
-        and retries — the data files are reused across attempts.
-
-        Reference parity: this is A13's chunked blind write
+        Reference parity: A13's chunked blind write
         (`lambda-backfill/main.py:22,41-46`) under the manifest-tree
         protocol's write-cheap lane; A14's merge semantics
-        (`main.py:33-39`) are deferred to read-time fold/compact_mor.
-
-        ``key`` defaults to the table's persisted merge key — the
-        hardcoded-default defect class the round-8 review flagged."""
-        # pre-write metadata reads (merge key, seq hint) take the same
-        # bounded retry-on-FileNotFoundError as the commit loop: a
-        # racing expire_versions GC-ing our pinned metadata file is a
-        # lost race, never a crash (the Delta twin's append got exactly
-        # this wrapper for its mergeKey resolution)
-        last: Exception | None = None
-        for _ in range(max_attempts):
-            try:
-                meta0 = self._current_meta()
-                key = key or self._merge_key(meta0)
-                seq_hint = (
-                    meta0["snapshots"][-1]["sequence-number"] + 1
-                    if meta0["snapshots"]
-                    else 1
-                )
-                break
-            except FileNotFoundError as e:
-                last = e
-                continue  # expiry GC'd our base metadata: re-pin and retry
-        else:
-            raise RuntimeError(
-                f"append metadata resolution failed {max_attempts} times "
-                f"at {self.path}"
-            ) from last
-        # add-column schema evolution, same union-by-name rule as
-        # apply_batch; schemas only ever WIDEN, so a batch whose columns
-        # fit the pinned schema fits every later schema too
-        _, evolved = evolve_schema_json(meta0["schema"], batch.schema, key)
-        rows = batch.select(
-            F.col(key),
-            F.col("seq_no").alias("last_seq"),
-            *[F.col(c) for c in payload_cols_of(batch.schema.json(), key)],
-            F.col("op"),
-        ).withColumn("bucket", self._bucket(F.col(key)))
+        (`main.py:33-39`) are deferred to read-time fold/compact_mor."""
         is_del = F.col("op") == "REMOVE"
         entries: list[dict] = []
         for pred, content in ((~is_del, "data"), (is_del, "equality-deletes")):
             part = rows.where(pred)
             if part.limit(1).count() == 0:
                 continue
-            for e in self._write_data(part, seq_hint):
+            for e in self._write_data(part, seq):
                 e["tags"] = {"mor": "true"}
                 e["data_file"]["content"] = content
                 if content == "equality-deletes":
                     e["data_file"]["equality_ids"] = [key]
                 entries.append(e)
-        if not entries:
-            return  # empty batch: no pointless commit
-        for _ in range(max_attempts):
-            meta_num = self._latest_meta_num() + 1
-            try:
-                meta = self._load_meta(meta_num - 1)
-                prev = self._snapshot_record(meta, None)
-            except FileNotFoundError:
-                continue  # expiry GC'd our base metadata: re-pin and retry
-            if evolved:
-                # re-union against the CURRENT schema each attempt: a
-                # racing writer may have evolved too, and publishing our
-                # stale union would silently drop its added columns
-                merged_schema, still_new = evolve_schema_json(
-                    meta["schema"], batch.schema, key
-                )
-                if still_new:
-                    meta = self._apply_schema(meta, merged_schema)
-            snap_rec = self._build_snapshot(prev, set(), entries, "append")
-            try:
-                self._commit_snapshot(meta_num, meta, snap_rec)
-                return
-            except FileExistsError:
-                continue  # appends never conflict: rebuild the list only
-        raise RuntimeError(
-            f"WRITE lost the commit race {max_attempts} times at {self.path}"
-        )
+        return entries
 
-    def optimize_plan(
-        self,
-        small_file_rows: int,
-        min_small_files: int,
-        tombstone_pct: int,
-    ) -> DataFrame:
-        """Maintenance policy: per bucket, decide COMPACT or SKIP from
-        MANIFEST ENTRIES alone (record_count per file; an equality-
-        delete file's record_count IS its remove count) — zero data
-        reads, O(files) driver work, the same metadata the pruning
-        uses. COMPACT when the read-side merge fan-in has grown
-        (≥ min_small_files pending files under small_file_rows rows)
-        or the tombstone debt has (equality-delete rows exceed
-        tombstone_pct% of the bucket's rows). The decision itself is
-        the SHARED policy (table_files.optimize_decisions — one
-        implementation for both protocols); only the stats extraction
-        here is manifest-specific.
-
-        Iceberg-specific extra: the plan also prices MANIFEST
+    def _table_rows(self, state: TableState) -> list[dict]:
+        """Iceberg-specific extra: the plan also prices MANIFEST
         fragmentation (round-10 verdict item 4 — the flat-metadata
         property must hold without operator intervention). When the
         expected per-commit rewrite width or the manifest-list length
@@ -1157,111 +863,40 @@ class IcebergLogSink:
         delta_files = ideal manifest count ceil(entries/target),
         delta_records = the √-packing target. Callers apply it with
         rewrite_manifests()."""
-        last: Exception | None = None
-        for _ in range(5):
-            try:
-                meta = self._current_meta()
-                prev = self._snapshot_record(meta, None)
-                old_list = self._manifest_list(prev)
-                entries = self._entries(prev)
-                break
-            except FileNotFoundError as e:
-                last = e
-                continue  # expiry GC'd our pinned tree: re-pin and retry
-        else:
-            raise RuntimeError(
-                f"optimize_plan failed 5 times at {self.path}"
-            ) from last
-        per_bucket: dict[int, dict] = {}
-        for e in entries:
-            df_ = e["data_file"]
-            b = int(df_["partition"]["bucket"])
-            d = per_bucket.setdefault(b, bucket_counters(b))
-            if self._is_pending(e):
-                d["delta_files"] += 1
-                d["delta_records"] += df_["record_count"]
-                if df_.get("content") == "equality-deletes":
-                    d["delta_removes"] += df_["record_count"]
-                if df_["record_count"] < small_file_rows:
-                    d["small_delta_files"] += 1
-            else:
-                d["base_files"] += 1
-                d["base_records"] += df_["record_count"]
-        table_rows: list[dict] = []
-        if entries:
-            target = _manifest_target(len(entries))
-            # LSM-aged scope (round 14): pricing sees only the COLD
-            # manifests — the subset rewrite_manifests will actually
-            # consolidate — so a REPACK row is emitted exactly when the
-            # aged apply would act (pricing a repack whose apply no-ops
-            # would skip the history-resetting marker: decision
-            # livelock).  The counters describe the aged repack's own
-            # work: cold manifests in, ceil(cold_entries/target) packs
-            # of ~target out.
-            cold, _hot = _split_lsm(old_list, prev["sequence-number"], target)
-            cold_entries = _entry_count(cold)
-            if cold and _repack_priced(
-                cold, cold_entries, target, self._repack_history(meta)
-            ):
-                table_rows.append(
-                    {
-                        "bucket": -1,
-                        "base_files": len(cold),
-                        "base_records": cold_entries,
-                        "delta_files": -(-cold_entries // target),
-                        "delta_records": target,
-                        "delta_removes": 0,
-                        "small_delta_files": 0,
-                        "decision": "REPACK",
-                    }
-                )
-        return optimize_decisions(
-            self.spark,
-            per_bucket,
-            min_small_files,
-            tombstone_pct,
-            table_rows=table_rows,
-        )
+        meta, prev = state.base
+        old_list = self._manifest_list(prev)
+        if not state.files:
+            return []
+        target = _manifest_target(len(state.files))
+        # LSM-aged scope (round 14): pricing sees only the COLD
+        # manifests — the subset rewrite_manifests will actually
+        # consolidate — so a REPACK row is emitted exactly when the
+        # aged apply would act (pricing a repack whose apply no-ops
+        # would skip the history-resetting marker: decision
+        # livelock).  The counters describe the aged repack's own
+        # work: cold manifests in, ceil(cold_entries/target) packs
+        # of ~target out.
+        cold, _hot = _split_lsm(old_list, prev["sequence-number"], target)
+        cold_entries = _entry_count(cold)
+        if not (
+            cold
+            and _repack_priced(cold, cold_entries, target, self._repack_history(meta))
+        ):
+            return []
+        return [
+            {
+                "bucket": -1,
+                "base_files": len(cold),
+                "base_records": cold_entries,
+                "delta_files": -(-cold_entries // target),
+                "delta_records": target,
+                "delta_removes": 0,
+                "small_delta_files": 0,
+                "decision": "REPACK",
+            }
+        ]
 
-    def compact_mor(
-        self, buckets: set[int], key: str | None = None, max_attempts: int = 5
-    ) -> None:
-        """rewriteDataFiles over the merge-on-read debt: fold the
-        selected buckets' pending files (appended data + equality
-        deletes) into rewritten base files in one commit. Folded REMOVE
-        entries become base tombstones, which the settled-tombstone
-        OPTIMIZE (compact) reclaims once the reorder horizon passes.
-        Same pin-before-read loser-retry as apply_batch — the retry
-        recomputes the candidate set from the winner's snapshot.
-        ``key`` defaults to the table's persisted merge key (the
-        partition-spec source field) — the hardcoded-default defect
-        class the round-8 review flagged on compact()."""
-        for _ in range(max_attempts):
-            meta_num = self._latest_meta_num() + 1
-            try:
-                meta = self._load_meta(meta_num - 1)
-                prev = self._snapshot_record(meta, None)
-                cand = self._entries(prev, buckets=buckets)
-            except FileNotFoundError:
-                continue  # expiry GC'd our base metadata: re-pin and retry
-            if not any(self._is_pending(e) for e in cand):
-                return  # nothing pending: no no-op commit
-            key = key or self._merge_key(meta)
-            folded = self._fold_entries(cand, meta["schema"], key=key)
-            entries = self._write_data(
-                folded.withColumn("bucket", self._bucket(F.col(key))),
-                prev["sequence-number"] + 1,
-            )
-            removed = {e["data_file"]["file_path"] for e in cand}
-            snap_rec = self._build_snapshot(prev, removed, entries, "replace")
-            try:
-                self._commit_snapshot(meta_num, meta, snap_rec)
-                return
-            except FileExistsError:
-                continue  # lost the race: recompute candidates
-        raise RuntimeError(
-            f"MOR OPTIMIZE lost the commit race {max_attempts} times at {self.path}"
-        )
+    # -- manifest maintenance ------------------------------------------------
 
     def rewrite_manifests(
         self,
@@ -1363,44 +998,6 @@ class IcebergLogSink:
 
     # -- VersionedSinkFormat ----------------------------------------------------
 
-    def changes_between(self, v_from: int, v_to: int) -> DataFrame:
-        """Incremental changelog scan: a bucket whose FILE SET is
-        identical in both snapshots is provably unchanged (immutable
-        files) and never read; only differing buckets are scanned from
-        each side, then `diff_states` classifies INSERT/UPDATE/DELETE."""
-        meta = self._current_meta()
-        s_from = self._snapshot_record(meta, v_from)
-        s_to = self._snapshot_record(meta, v_to)
-
-        def by_bucket(snap: dict) -> dict[int, set[str]]:
-            out: dict[int, set[str]] = {}
-            for e in self._entries(snap):
-                out.setdefault(
-                    e["data_file"]["partition"]["bucket"], set()
-                ).add(e["data_file"]["file_path"])
-            return out
-
-        bb_from, bb_to = by_bucket(s_from), by_bucket(s_to)
-        changed = {
-            b
-            for b in set(bb_from) | set(bb_to)
-            if bb_from.get(b, set()) != bb_to.get(b, set())
-        }
-        key = self._merge_key(meta)
-        # _fold_entries on each side: a changed bucket may carry pending
-        # merge-on-read files, and the changefeed classifies STATES, not
-        # physical layouts. BOTH sides fold under the TO schema (schemas
-        # only widen; pre-evolution files null-fill) and the feed
-        # carries every TO-side payload column (round-10 review)
-        schema_to = self._schema_at(meta, s_to)
-        a = visible(
-            self._fold_entries(self._entries(s_from, changed), schema_to, key=key)
-        )
-        b = visible(
-            self._fold_entries(self._entries(s_to, changed), schema_to, key=key)
-        )
-        return diff_states(a, b, payload_cols=payload_cols_of(schema_to, key), key=key)
-
     def expire_versions(
         self,
         keep_last: int,
@@ -1496,11 +1093,9 @@ class IcebergLogSink:
             # (an idle table's old snapshot can be superseded seconds
             # ago) and not the file's mtime (it was WRITTEN long ago;
             # what must age is its tombstoning). Spared objects become
-            # orphans for a later sweep — touched below so the sweep's
-            # mtime grace restarts from the sparing, not the write.
+            # orphans for a later sweep — touched so the sweep's mtime
+            # grace restarts from the sparing, not the write.
             # (round-9 review, two passes)
-            retention_cutoff_ms = (time.time() - orphan_grace_s) * 1000
-
             def refs(s: dict) -> set[str]:
                 out = {s["manifest-list"]}
                 for m in self._read_ndjson(s["manifest-list"]):
@@ -1521,21 +1116,9 @@ class IcebergLogSink:
                 for rel in cur_refs - next_refs:
                     death_ms[rel] = ts
                 next_refs = cur_refs
-            for rel in sorted(set(death_ms) - keep_manifests - keep_files):
-                full = os.path.join(self.path, rel)
-                if death_ms[rel] > retention_cutoff_ms:
-                    try:
-                        os.utime(full)  # restart the orphan-sweep clock:
-                        # the stamp dies with this metadata, so mtime
-                        # must carry the tombstone age forward
-                    except FileNotFoundError:
-                        pass  # vanished: nothing to spare
-                    # any other failure propagates: silently keeping the
-                    # ancient write-mtime would arm the NEXT sweep to
-                    # reclaim this file inside its tombstone grace
-                    continue
-                if os.path.exists(full):
-                    os.remove(full)
+            self._reclaim_dead(
+                set(death_ms) - keep_manifests - keep_files, death_ms, orphan_grace_s
+            )
             # old metadata files: keep the trailing PREVIOUS_METADATA_KEPT
             # (Iceberg's write.metadata.previous-versions-max) so a writer
             # that pinned its base metadata just before this expiry can
@@ -1547,51 +1130,26 @@ class IcebergLogSink:
                 if os.path.exists(p):
                     os.remove(p)
             if sweep_orphans:
-                cutoff = time.time() - orphan_grace_s
-
-                def aged_out(full: str) -> bool:
-                    try:
-                        return os.path.getmtime(full) <= cutoff
-                    except OSError:
-                        return False  # vanished mid-sweep: nothing to do
-
-                data_root = os.path.join(self.path, "data")
-                for dirpath, _dirs, files in os.walk(data_root):
-                    for fn in files:
-                        full = os.path.join(dirpath, fn)
-                        rel = os.path.relpath(full, self.path)
-                        if (
-                            fn.endswith(".parquet")
-                            and rel not in keep_files
-                            and aged_out(full)
-                        ):
-                            os.remove(full)
                 # manifest/manifest-list debris from crashed or
                 # race-losing commit attempts (written before the
                 # metadata CAS, referenced by no snapshot) is the
-                # metadata twin of orphaned data files — reclaim it the
+                # metadata twin of orphaned data files — reclaimed the
                 # same way (round-7 review finding), behind the same
-                # age floor (an in-flight attempt's manifests are
-                # indistinguishable from debris until its CAS lands)
-                for fn in os.listdir(self._meta_dir()):
-                    rel = os.path.join(META_DIR, fn)
-                    full = os.path.join(self.path, rel)
-                    if (
+                # age floor; so are crashed hint moves' attempt-scoped
+                # tmps (an in-flight commit's hint tmp is about to be
+                # consumed)
+                def is_debris(fn: str) -> bool:
+                    return (
                         fn.startswith(("manifest-", "snap-"))
-                        and rel not in keep_manifests
-                        and aged_out(full)
-                    ) or (
-                        # crashed hint moves leave attempt-scoped tmp
-                        # debris; same age floor (an in-flight commit's
-                        # hint tmp is about to be consumed)
-                        fn.startswith("version-hint.text.tmp")
-                        and aged_out(full)
-                    ):
-                        os.remove(full)
+                        and os.path.join(META_DIR, fn) not in keep_manifests
+                    ) or fn.startswith("version-hint.text.tmp")
+
+                self._sweep_orphans(keep_files, orphan_grace_s, is_debris)
             return [s["sequence-number"] for s in expired]
         raise RuntimeError(
             f"expireSnapshots lost the commit race 5 times at {self.path}"
         )
+
 
 
 # ---------------------------------------------------------------------------
@@ -1608,109 +1166,30 @@ def _register_iceberg_fold() -> None:
     from ..operators.cdc import changelog, fold_changelog, with_changelog
     from ..registry import register, tracked_persist
 
-    @register(
-        "q_cdc_iceberg_log_fold",
-        oracle=with_changelog(
-            """
-SELECT key, seq_no AS last_seq, payload_value
-FROM (
-    SELECT key, seq_no, op, payload_value,
-           row_number() OVER (PARTITION BY key ORDER BY seq_no DESC) AS rn
-    FROM changelog
-) WHERE rn = 1 AND op <> 'REMOVE'
-"""
-        ),
-    )
+    @register("q_cdc_iceberg_log_fold", oracle=with_changelog(LOG_FOLD_ORACLE))
     def q_cdc_iceberg_log_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """The Iceberg-shaped table format end to end under one oracle
-        hash — the same drill the Delta-protocol log passes
-        (q_cdc_delta_log_fold), proving the seam generalizes across
-        metadata designs: init = fold of the changelog's first third,
-        two MERGE commits (manifest-pruned, loser-retry protocol), a
-        rewriteDataFiles past the full reorder horizon (settled
-        tombstones rewritten away), then expireSnapshots to the last
-        two (metadata republication + manifest/data GC with orphan
-        sweep). What survives all four maintenance operations must
-        still equal the plain changelog fold — the PITR identity
-        (`state-machine.json` restore path) expressed through the
-        snapshot-tree format rather than the transaction-log format."""
-        cl = changelog(spark, sf_dir).select(
-            "seq_no", "op", "key", "payload_value"
-        )
-        max_seq = cl.agg(F.max("seq_no")).first()[0]  # orchestration scalar
-        c1, c2 = max_seq // 3, (2 * max_seq) // 3
-        base = tempfile.mkdtemp(prefix="icebergfold-")
-        sink = IcebergLogSink(spark, os.path.join(base, "t"))
-        # NO width pin: MERGE commits + rewriteDataFiles are real
-        # per-bucket merges — compute-bound (r16 idle-32 A/B:
-        # pinned 9.39 s vs session width 4.57 s)
-        sink.init(fold_changelog(cl.where(F.col("seq_no") <= c1)))
-        sink.apply_batch(
-            cl.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
-        )
-        sink.apply_batch(cl.where(F.col("seq_no") > c2))
-        sink.compact(reorder_horizon_seq=int(max_seq) + 1)
-        # grace 0 is safe here: this builder is the table's only writer
-        sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
-        result = tracked_persist(
-            sink.visible().select("key", "last_seq", "payload_value")
-        )
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
-        return result
+        """The Iceberg-shaped table format end to end — the same drill
+        the Delta-protocol log passes (`_log_fold_drill`), proving the
+        seam generalizes across metadata designs: init, two
+        manifest-pruned MERGE commits, a rewriteDataFiles past the full
+        reorder horizon, then expireSnapshots to the last two
+        (metadata republication + manifest/data GC with orphan sweep) —
+        the PITR identity expressed through the snapshot-tree format
+        rather than the transaction-log format."""
+        return _log_fold_drill(spark, sf_dir, IcebergLogSink)
 
-    @register(
-        "q_cdc_iceberg_mor_fold",
-        oracle=with_changelog(
-            """
-SELECT key, seq_no AS last_seq, payload_value
-FROM (
-    SELECT key, seq_no, op, payload_value,
-           row_number() OVER (PARTITION BY key ORDER BY seq_no DESC) AS rn
-    FROM changelog
-) WHERE rn = 1 AND op <> 'REMOVE'
-"""
-        ),
-    )
+    @register("q_cdc_iceberg_mor_fold", oracle=with_changelog(LOG_FOLD_ORACLE))
     def q_cdc_iceberg_mor_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """The Iceberg merge-on-read lane end to end under one oracle
-        hash — the manifest-tree twin of q_stream_mor_ingest's Delta
-        drill: init = fold of the changelog's first third, then TWO
-        blind appends (upserts as data files, REMOVEs as equality-
-        delete files — the v2 row-level-delete write, no reads, no
-        removed files), compact_mor over HALF the buckets (pending
-        files folded into rewritten base), a settled-tombstone OPTIMIZE
-        (which must SKIP the still-pending buckets — the round-8
-        resurrection guard under this protocol), then expireSnapshots
-        with orphan sweep. visible() must still equal the plain
-        changelog fold whichever lane each row travelled — reference
-        A13/A14 (`lambda-backfill/main.py:22,33-46`) under the third
-        protocol's write-cheap lane."""
-        cl = changelog(spark, sf_dir).select(
-            "seq_no", "op", "key", "payload_value"
-        )
-        max_seq = cl.agg(F.max("seq_no")).first()[0]  # orchestration scalar
-        c1, c2 = max_seq // 3, (2 * max_seq) // 3
-        base = tempfile.mkdtemp(prefix="icebergmor-")
-        sink = IcebergLogSink(spark, os.path.join(base, "t"))
-        # NO width pin: compact_mor folds + full compact are real
-        # merges (r16 idle-32 A/B: pinned 22.59 s vs session 7.12 s —
-        # the widest gap of the audit)
-        sink.init(fold_changelog(cl.where(F.col("seq_no") <= c1)))
-        sink.append(
-            cl.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
-        )
-        sink.append(cl.where(F.col("seq_no") > c2))
-        sink.compact_mor(set(range(sink.n_buckets // 2)))
-        sink.compact(reorder_horizon_seq=int(max_seq) + 1)
-        # grace 0 is safe here: this builder is the table's only writer
-        sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
-        result = tracked_persist(
-            sink.visible().select("key", "last_seq", "payload_value")
-        )
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
-        return result
+        """The Iceberg merge-on-read lane end to end — the manifest-tree
+        twin of q_stream_mor_ingest's Delta drill (`_log_fold_drill`):
+        init, TWO blind appends (upserts as data files, REMOVEs as
+        equality-delete files — the v2 row-level-delete write, no
+        reads, no removed files), compact_mor over HALF the buckets, a
+        settled-tombstone rewriteDataFiles that must SKIP the
+        still-pending buckets, then expireSnapshots with orphan sweep —
+        reference A13/A14 (`lambda-backfill/main.py:22,33-46`) under
+        the third protocol's write-cheap lane."""
+        return _log_fold_drill(spark, sf_dir, IcebergLogSink, merge_on_read=True)
 
     @register(
         "q_cdc_iceberg_schema_evolution",

@@ -50,6 +50,8 @@ class RedriveStore:
     Layout under ``root``:
       retry_v{n}/    versioned retry-store snapshots (parquet)
       accepted_v{n}/ the cycle's accepted rows (for replay-safe returns)
+      kept_v{n}/     a private hardlink clone of accepted_v{n}
+                     (kept_snapshot)
       dlq/cycle_v{n} per-cycle poison records (parquet, overwrite)
       _SCHEMA.json   the record schema (written once, read on restart)
       _RETRY_LATEST  JSON commit pointer {"path", "version", "epoch"}
@@ -213,6 +215,27 @@ class RedriveStore:
             shutil.rmtree(os.path.join(self.root, stale), ignore_errors=True)
         return self.spark.read.schema(self._schema).parquet(accepted_path)
 
+    def kept_snapshot(self) -> DataFrame:
+        """The committed cycle's accepted rows over a PRIVATE hardlink
+        clone of its immutable files (the versioned_sink
+        expired_shared_sink pattern): zero Spark jobs, and the clone
+        survives the next cycle reclaiming accepted_v{n}, so a caller
+        holding several cycles' results needs no eager checkpoint to
+        honour the consume-before-reclaim contract. The clone lives
+        under the store root and goes with cleanup()."""
+        src = os.path.join(self.root, f"accepted_v{self._version}")
+        dst = os.path.join(self.root, f"kept_v{self._version}")
+        if not os.path.isdir(dst):
+            # staged then renamed in: a crash mid-clone never leaves a
+            # partial kept dir that a later call would read as complete
+            tmp = f"{dst}.tmp-{uuid.uuid4().hex[:8]}"
+            os.makedirs(tmp)
+            for f in os.listdir(src):
+                if f.endswith(".parquet"):
+                    os.link(os.path.join(src, f), os.path.join(tmp, f))
+            os.rename(tmp, dst)
+        return self.spark.read.schema(self._schema).parquet(dst)
+
     def has_pending(self) -> bool:
         p = self.pending()
         return p is not None and bool(p.take(1))
@@ -319,25 +342,15 @@ def q_cdc_dlq_redrive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # changelog is compute-bound (r16 idle-32 A/B: pinned 4.73 s vs
     # session width 4.03 s; the r15 pin won only on a loaded host)
     batch = cl
-    for i in range(MAX_RECEIVES):  # cycle 1 delivers; 2-5 are redelivery ticks
+    for _ in range(MAX_RECEIVES):  # cycle 1 delivers; 2-5 are redelivery ticks
         store.deliver(batch, try_reject)
-        # consume the cycle's accepted snapshot by HARDLINK-CLONING its
-        # immutable files into a query-private dir (the versioned_sink
-        # expired_shared_sink pattern) instead of an eager
-        # localCheckpoint: zero Spark jobs per cycle, the clone
-        # survives the store reclaiming accepted_v{n} on the next
-        # commit, and the rows are read ONCE by the final union+agg
+        # a private clone, not an eager localCheckpoint: zero Spark jobs
+        # per cycle, and the rows are read ONCE by the final union+agg
         # (r16: removes 5 sequential checkpoint jobs + their gaps)
-        src = os.path.join(root, f"accepted_v{store._version}")
-        dst = os.path.join(root, f"kept_c{i}")
-        os.makedirs(dst)
-        for f in os.listdir(src):
-            if f.endswith(".parquet"):
-                os.link(os.path.join(src, f), os.path.join(dst, f))
         accepted_cycles.append(
-            spark.read.schema(store._schema)
-            .parquet(dst)
-            .select(F.lit("applied").alias("route"), F.col(RECEIVE_COUNT_COL))
+            store.kept_snapshot().select(
+                F.lit("applied").alias("route"), F.col(RECEIVE_COUNT_COL)
+            )
         )
         batch = empty
 

@@ -1,10 +1,15 @@
 """The table-format seam: what CDC query code may assume about a sink.
 
-Both concrete sinks (`BucketedCdcSink`, `VersionedCdcSink`) are
-parquet-directory implementations of these structural interfaces, and
-every registered query touches them ONLY through seam methods — so a
-real lakehouse table format drops in without touching query code. The
-method-by-method mapping to the two production formats:
+Four concrete sinks implement these structural interfaces: the
+parquet-directory sinks `BucketedCdcSink` (cdc_sink.py) and
+`VersionedCdcSink` (versioned_sink.py), and the two log-structured
+lakehouse formats `DeltaLogSink` (delta_log_sink.py) and
+`IcebergLogSink` (iceberg_log_sink.py). The last two share one core,
+`table_files.LogTableSink`, which implements every seam method once;
+each format encodes only its log. Every registered query touches a
+sink ONLY through seam methods — so a real lakehouse table format drops
+in without touching query code. The method-by-method mapping to the
+two production formats:
 
 | seam method              | Delta Lake                      | Iceberg                          |
 |--------------------------|---------------------------------|----------------------------------|

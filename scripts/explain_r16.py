@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for named queries to plans/r15/<name>_<tag>.txt.
+"""Dump .explain('formatted') for named queries to plans/r16/<name>_<tag>.txt.
 
-Usage: python scripts/explain_r15.py <before|after> q_a q_b ...
+Usage: python scripts/explain_r16.py <before|after> q_a q_b ...
 Streaming/protocol drills return a persisted result frame whose plan is
 an InMemory scan; their meaningful evidence is the job-level profile
 (scripts/profile_r15.py), committed alongside.
@@ -26,7 +26,7 @@ def main() -> None:
     names = sys.argv[2:]
     out_dir = os.path.join(ROOT, "plans", "r16")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("explain_r15", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("explain_r16", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
     for name in names:

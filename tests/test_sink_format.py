@@ -9,6 +9,9 @@ implementation (method mapping in streaming/sink_format.py) drops in
 without touching query code.
 """
 
+import os
+import uuid
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -166,3 +169,89 @@ def test_changefeed_across_pure_compaction_is_empty(spark, tmp_path, name):
     sink.compact(reorder_horizon_seq=21)  # key 3's tombstone settled
     assert sink.latest_version() == v + 1
     assert sink.changes_between(v, v + 1).count() == 0
+
+
+# -- work budget ---------------------------------------------------------------
+
+
+def _data_files(path):
+    return {
+        os.path.join(d, f)
+        for d, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    }
+
+
+def _measured(spark, path, fn):
+    """(Spark jobs, data files added, result) of one call: its jobs are
+    the ones tagged with a fresh job group, read once the listener bus
+    has drained (the status store fills asynchronously)."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex[:12]}"
+    before = _data_files(path)
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs, len(_data_files(path) - before), out
+
+
+# (Spark jobs, data files added) per call on the fixed table below. A
+# change to the sinks that adds an action or a file to any call shows
+# here before it shows in a benchmark.
+WORK_BUDGET = {
+    "delta": {
+        "init": (2, 3), "apply_batch": (6, 2), "compact_noop": (2, 0),
+        "compact": (4, 1), "append": (4, 3), "compact_mor": (4, 4),
+        "changes_between": (3, 0), "visible_count": (2, 0),
+    },
+    # append: one limit(1).count() probe per content kind before each
+    # kind's write (data rows, then equality deletes)
+    "iceberg": {
+        "init": (2, 3), "apply_batch": (6, 2), "compact_noop": (2, 0),
+        "compact": (4, 1), "append": (8, 3), "compact_mor": (4, 4),
+        "changes_between": (3, 0), "visible_count": (2, 0),
+    },
+}
+
+
+@pytest.mark.parametrize("name", ["delta", "iceberg"])
+def test_log_sink_work_budget(spark, tmp_path, name):
+    path = str(tmp_path / name)
+    sink = FACTORIES[name](spark, path)
+    calls = [
+        ("init", lambda: sink.init(_snapshot(
+            spark, [(k, 0, float(k)) for k in range(1, 13)]
+        ))),
+        ("apply_batch", lambda: sink.apply_batch(_batch(spark, [
+            (2, 10, "MODIFY", 2.5), (3, 11, "REMOVE", None),
+            (13, 12, "INSERT", 13.0),
+        ]))),
+        # the seq-11 tombstone is above this horizon: the stats admit
+        # its file, the exact emptiness check turns the commit down
+        ("compact_noop", lambda: sink.compact(reorder_horizon_seq=5)),
+        ("compact", lambda: sink.compact(reorder_horizon_seq=12)),
+        ("append", lambda: sink.append(_batch(spark, [
+            (1, 20, "MODIFY", 1.5), (4, 21, "REMOVE", None),
+            (14, 22, "INSERT", 14.0),
+        ]))),
+        ("compact_mor", lambda: sink.compact_mor(set(range(4)))),
+        ("changes_between", lambda: sink.changes_between(
+            2, sink.latest_version()
+        ).collect()),
+        ("visible_count", lambda: sink.visible().count()),
+    ]
+    measured = {}
+    results = {}
+    for label, fn in calls:
+        jobs, files, results[label] = _measured(spark, path, fn)
+        measured[label] = (jobs, files)
+    assert sink.latest_version() == 5  # the no-op compact committed nothing
+    assert results["visible_count"] == 12
+    assert sorted(r.key for r in results["changes_between"]) == [1, 4, 14]
+    assert measured == WORK_BUDGET[name]
